@@ -13,6 +13,7 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 
 def _fold_dot(a: str, b: str, dim: int) -> str:
@@ -524,7 +525,7 @@ POOL_SALT = "knnjoin:"
 
 def pool_rank_window(
     id_col: str, label_col: str, salt: str = POOL_SALT
-) -> Window:
+) -> WindowSpec:
     """The (label)-partitioned salted-md5 ranking window that defines
     budget-capped pool membership — THE single definition both
     :func:`knn_pool` and epoch-state initializers must share: a row is in

@@ -31,6 +31,11 @@ is written once (r12 verdict #3):
    verdict flagged. ``compact`` folds the accumulated deltas into a
    fresh single-version base (advancing ``base``) so read-side union
    width stays bounded on always-on streams.
+
+``rollback`` is the reset for a lifecycle replayed over the same base:
+it drops commit records newer than the target version, newest first (a
+crash mid-way still leaves a committed prefix), then their version dirs,
+so the base is reused instead of rebuilt.
 """
 
 from __future__ import annotations
@@ -40,10 +45,12 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from etl_aws_spark import fsutil
 
 _COMMIT_RE = re.compile(r"^c(\d{8})\.b(-?\d+)\.base(\d{8})$")
+_VERSION_DIR_RE = re.compile(r"^v(\d+)$")
 
 
 class VersionedState:
@@ -91,8 +98,35 @@ class VersionedState:
         if base is None:
             prev = self.latest()
             base = prev[2] if prev else version
+        fsutil.touch(self.spark, self._record(version, batch_id, base))
+
+    def _record(self, version: int, batch_id: int, base: int) -> str:
         name = "c%08d.b%d.base%08d" % (version, batch_id, base)
-        fsutil.touch(self.spark, posixpath.join(self._commits_dir(), name))
+        return posixpath.join(self._commits_dir(), name)
+
+    def rollback(self, version: int) -> None:
+        """Reset the state to committed ``version``. Commit records newer
+        than ``version`` go first, newest first, so a crash mid-rollback
+        still leaves a committed prefix that every reader resolves as
+        usual; then every ``v{n}`` dir with n > ``version`` goes,
+        committed or not. Raises ``ValueError`` if ``version`` has no
+        commit record or lies below the current base (compaction already
+        removed what it would restore)."""
+        cs = self.commits()
+        where = "under %s" % self.root
+        if version not in {c[0] for c in cs}:
+            raise ValueError("version %d is not committed %s" % (version, where))
+        base = cs[-1][2]
+        if version < base:
+            raise ValueError("version %d is below base %d %s" % (version, base, where))
+        for c in reversed(cs):
+            if c[0] <= version:
+                break
+            fsutil.rmtree(self.spark, self._record(*c))
+        for name in fsutil.list_names(self.spark, self.root):
+            m = _VERSION_DIR_RE.match(name)
+            if m and int(m.group(1)) > version:
+                fsutil.rmtree(self.spark, posixpath.join(self.root, name))
 
     # ---- tree I/O --------------------------------------------------------
 
@@ -104,7 +138,14 @@ class VersionedState:
         Overwrite mode makes a replay clobber its own partial output."""
         df.write.mode("overwrite").parquet(self.tree_path(version, tree))
 
-    def read_union(self, tree: str) -> DataFrame:
+    def _read(self, paths: list[str], schema: StructType | None) -> DataFrame:
+        """One parquet read of ``paths``. A declared ``schema`` skips the
+        footer-inference job an undeclared read pays before any data
+        moves."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(*paths)
+
+    def read_union(self, tree: str, schema: StructType | None = None) -> DataFrame:
         """Union of ``tree`` across committed versions base..latest, with
         a ``_v`` version column for latest-wins folds.
 
@@ -114,31 +155,36 @@ class VersionedState:
         before any data moved — on the job-count-bound lifecycle queries
         that was measurable wall. ``_v`` is recovered from the file path
         (``.../v{n}/{tree}/part-*``), anchored greedily so only the
-        version segment directly enclosing ``tree`` matches."""
+        version segment directly enclosing ``tree`` matches. A row whose
+        path does not match raises at read time instead of carrying a
+        null ``_v`` that the latest-wins fold would silently drop."""
         c = self.latest()
         if c is None:
             raise FileNotFoundError("no committed version under %s" % self.root)
         latest_v, _, base = c
         if latest_v == base:
-            return self.spark.read.parquet(
-                self.tree_path(base, tree)
-            ).withColumn("_v", F.lit(base))
+            return self._read([self.tree_path(base, tree)], schema).withColumn(
+                "_v", F.lit(base)
+            )
         paths = [self.tree_path(v, tree) for v in range(base, latest_v + 1)]
         pat = ".*/v(\\d+)/" + re.escape(tree) + "/"
-        return self.spark.read.parquet(*paths).withColumn(
-            "_v",
-            F.regexp_extract(F.input_file_name(), pat, 1).cast("int"),
-        )
+        path = F.input_file_name()
+        raw = F.regexp_extract(path, pat, 1)
+        miss = F.concat(F.lit("no version segment for tree %r in " % tree), path)
+        v = F.when(raw == "", F.raise_error(miss)).otherwise(raw).cast("int")
+        return self._read(paths, schema).withColumn("_v", v)
 
-    def read_append(self, tree: str) -> DataFrame:
+    def read_append(self, tree: str, schema: StructType | None = None) -> DataFrame:
         """Fold for append-only trees: the plain union of all deltas."""
-        return self.read_union(tree).drop("_v")
+        return self.read_union(tree, schema).drop("_v")
 
-    def read_latest_wins(self, tree: str, keys: list[str]) -> DataFrame:
+    def read_latest_wins(
+        self, tree: str, keys: list[str], schema: StructType | None = None
+    ) -> DataFrame:
         """Fold for keyed trees: every key's rows from the newest version
         that wrote that key (one key-partitioned shuffle over the state —
         the same shuffle the old snapshot layout paid to re-rank)."""
-        u = self.read_union(tree)
+        u = self.read_union(tree, schema)
         w = Window.partitionBy(*keys)
         return (
             u.withColumn("_mxv", F.max("_v").over(w))

@@ -802,18 +802,21 @@ def similarity_pq_index_adc_search(spark: SparkSession, sf_dir: str) -> DataFram
     emb = load(spark, sf_dir, "embeddings")
     index = _cdir(sf_dir, "pq_index")
     cb_path, codes_path = _os.path.join(index, "codebook"), _os.path.join(index, "codes")
+    # the artifacts' declared schemas: an inferred read pays a footer job
+    cb_schema = "sub int, code int, spos int, cw double"
+    codes_schema = "_id long, sub int, code int"
     if not _os.path.exists(_os.path.join(codes_path, "_SUCCESS")):
         parts, cb = pq.train_codebook(
             emb, "vec_id", "embedding", d_sub=_PQ_DSUB, k=_PQ_K, iters=1
         )
         cb.write.mode("overwrite").parquet(cb_path)
-        cb_at_rest = spark.read.parquet(cb_path)
+        cb_at_rest = spark.read.schema(cb_schema).parquet(cb_path)
         pq.assign_codes(parts, cb_at_rest).select("_id", "sub", "code").write.mode(
             "overwrite"
         ).parquet(codes_path)
 
-    codebook = spark.read.parquet(cb_path)
-    codes = spark.read.parquet(codes_path)
+    codebook = spark.read.schema(cb_schema).parquet(cb_path)
+    codes = spark.read.schema(codes_schema).parquet(codes_path)
     queries = emb.filter(F.col("vec_id") < 5)
     out = pq.adc_search(
         codes, codebook, queries, "vec_id", "embedding", d_sub=_PQ_DSUB, topk=10

@@ -35,7 +35,10 @@ def test_width_capped_by_bytes_floor(spark):
     )
     got = fan_out_small_scan(emb).rdd.getNumPartitions()
     assert got == want
-    assert got < spark.sparkContext.defaultParallelism  # floor binds at sf0.1
+    # the floor binds at sf0.1 only when the bytes-derived width is below
+    # the core count; on a small box the core cap binds first
+    if -(-size // _MIN_BYTES_PER_PART) < spark.sparkContext.defaultParallelism:
+        assert got < spark.sparkContext.defaultParallelism
 
 
 def test_heavy_floor_widens_more(spark):
@@ -44,7 +47,11 @@ def test_heavy_floor_widens_more(spark):
     cust = load(spark, SF_DIR, "customer")
     light = fan_out_small_scan(cust).rdd.getNumPartitions()
     heavy = fan_out_small_scan(cust, HEAVY_BYTES_PER_PART).rdd.getNumPartitions()
-    assert heavy > light
+    # widening needs headroom: once the light width reaches the core
+    # count both classes sit at the same cap
+    if light < spark.sparkContext.defaultParallelism:
+        assert heavy > light
+    assert heavy >= light
     assert heavy <= spark.sparkContext.defaultParallelism
 
 
