@@ -68,3 +68,14 @@ def coalesce_zero(c: Column | str) -> Column:
     """NULL -> 0.0 (window warm-up fill, `glue.py:199-214`)."""
     col = F.col(c) if isinstance(c, str) else c
     return F.coalesce(col, F.lit(0.0))
+
+
+def rnd_nudged(c: Column, n: int = 4) -> Column:
+    """Nudged rounding bridge for columns measured to land exactly on
+    decimal half-boundaries (SCALE.md §8): Spark rounds the shortest-
+    decimal repr HALF_UP while DuckDB rounds the binary double, so a
+    bit-identical value can round differently. Adding sign(x)·1e-9 —
+    far above any summation jitter, far below data resolution — moves
+    the value off the boundary the same way on BOTH engines. Mirror with
+    ``suite._util.sql_rnd_nudged`` in the oracle."""
+    return F.round(c + F.signum(c) * F.lit(1e-9), n) + F.lit(0.0)

@@ -19,12 +19,8 @@ round (house pattern from `lsh_closure`).
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-log = logging.getLogger(__name__)
 
 
 def connected_components(
@@ -39,7 +35,7 @@ def connected_components(
     # >12 propagation steps). The exact-fixpoint probe exits EARLY when
     # converged, so a higher cap costs nothing on converged graphs; the
     # cap only binds where the old default silently returned a partial
-    # closure (the log.warning below fires there).
+    # closure (it raises below instead).
     edges_subset_of_vertices: bool = False,
 ) -> DataFrame:
     """Label every vertex with the minimum id in its connected component.
@@ -74,7 +70,8 @@ def connected_components(
     super-round" is equivalent to "no change in any internal step" —
     the early exit is exact.
 
-    Returns (id_col, component_id).
+    Returns (id_col, component_id). Raises ``RuntimeError`` when
+    ``max_rounds`` runs out while labels are still changing.
     """
     e0 = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).filter(
         F.col("_s") != F.col("_d")
@@ -169,14 +166,12 @@ def connected_components(
     if changed != 0:
         # labels still moved on the last super-round: the round budget is
         # exhausted, not converged — components may carry split labels on
-        # graphs with diameter >> max_rounds. Surface it rather than
-        # silently returning a partial closure.
-        log.warning(
-            "connected_components: max_rounds=%d exhausted before "
-            "convergence (labels changed on the final super-round); "
-            "returned labels may split long-diameter components — raise "
-            "max_rounds.",
-            max_rounds,
+        # graphs with diameter >> max_rounds. No caller wants a partial
+        # closure, so fail loudly.
+        raise RuntimeError(
+            f"connected_components: max_rounds={max_rounds} exhausted before "
+            "convergence (labels changed on the final super-round); raise "
+            "max_rounds."
         )
     # isolated vertices re-attach here: component = own id
     return (

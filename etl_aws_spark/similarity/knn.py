@@ -33,14 +33,6 @@ def _fold_l2(a: str, b: str, dim: int) -> str:
     )
 
 
-def cosine_expr(a: str, b: str, dim: int) -> Column:
-    """Cosine similarity of two array<float> columns, double-widened."""
-    dot = _fold_dot(a, b, dim)
-    na = _fold_dot(a, a, dim)
-    nb = _fold_dot(b, b, dim)
-    return F.expr(f"({dot}) / (sqrt({na}) * sqrt({nb}))")
-
-
 def brute_topk(
     embeddings: DataFrame,
     queries: DataFrame,

@@ -24,14 +24,10 @@ dimensionality reduction); extension tier per SURVEY §2.13.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _nudged(c: Column, n: int) -> Column:
-    # SCALE.md §8 half-boundary bridge (suite/_util.rnd_nudged twin; kept
-    # local so the operator layer stays import-free of the suite).
-    return F.round(c + F.signum(c) * F.lit(1e-9), n) + F.lit(0.0)
+from etl_aws_spark.functions import rnd_nudged
 
 
 def gram_components(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
@@ -82,7 +78,7 @@ def covariance_matrix(components: DataFrame) -> DataFrame:
         gram.join(F.broadcast(sa), "i")
         .join(F.broadcast(sb), "j")
         .crossJoin(F.broadcast(nv))
-        .select("i", "j", _nudged(raw_cv, 8).alias("cv"))
+        .select("i", "j", rnd_nudged(raw_cv, 8).alias("cv"))
     )
 
 
@@ -127,7 +123,7 @@ def top_component(df: DataFrame, vec_col: str, dim: int, iters: int = 6) -> Data
             w.crossJoin(F.broadcast(nrm))
             .select(
                 F.col("i").alias("pos"),
-                _nudged(F.col("w") / F.col("nm"), 8).alias("val"),
+                rnd_nudged(F.col("w") / F.col("nm"), 8).alias("val"),
             )
             .localCheckpoint(eager=True)
         )

@@ -14,14 +14,16 @@ Reference analogue: the notebooks' feature-compression prep
 this is the §2.13 extension tier (SURVEY.md) built from the public PQ
 literature (Jégou et al., TPAMI 2011).
 
-Scale shape (100 TB): every frame shuffled here carries only scalar
-components — ``(id, sub, spos, val)`` parts or ``(id, sub, code, dist)``
-candidates — never whole vectors. Codebooks are ``m·k·(dim/m)`` doubles
-(1 KiB here), always broadcast. Training cost is the inherent PQ
-``N·dim·k`` codeword-evaluation product, executed as one broadcast join
-plus a map-side-combined aggregate; the corpus is scanned, never
-shuffled by vector. ADC search shuffles ``(query, neighbor, dist)``
-triples only, and the distance table (``|Q|·m·k`` rows) is broadcast.
+Scale shape (100 TB): the corpus is never shuffled. Encoding runs as
+one Arrow kernel (``mapInPandas``) over the scan with the collected
+codebook in its closure, so a vector's ``m`` codes come out of the
+partition it was read in. Codebooks are ``m·k·(dim/m)`` doubles (1 KiB
+here), collected as driver model state and re-entered as local frames.
+Training cost is the inherent PQ ``N·dim·k`` codeword-evaluation
+product, executed by the same kernel, and each Lloyd recompute shuffles
+only map-side-combined ``(sub, code, spos)`` partial means. ADC search
+shuffles ``(query, neighbor, dist)`` triples only, and the per-query
+distance tables (``|Q|·m·k`` entries) are broadcast.
 
 Determinism contract (FIXTURES.md §C): codebook components are rounded
 to 4 digits (the rounded codebook IS the index artifact, exactly as in
@@ -36,64 +38,26 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _ordered_fold_sum(order_col: str, term_col: str) -> Column:
-    """Sum ``term_col`` in ascending ``order_col`` order as a left fold from
-    0.0 — the engine-exact summation both Spark and DuckDB replay."""
-    return F.expr(
-        f"aggregate(transform(array_sort(collect_list(struct({order_col}, {term_col}))), "
-        f"s -> s.{term_col}), cast(0.0 as double), (acc, x) -> acc + x)"
-    )
+from etl_aws_spark.functions import rnd_nudged
 
 
-def subvector_parts(df: DataFrame, id_col: str, vec_col: str, d_sub: int) -> DataFrame:
-    """Explode vectors to scalar subspace components
-    ``(_id, sub, spos, val)`` — the only shape PQ ever shuffles."""
-    return df.select(
-        F.col(id_col).alias("_id"),
+def init_codebook(
+    df: DataFrame, id_col: str, vec_col: str, d_sub: int, k: int, round_digits: int = 4
+) -> DataFrame:
+    """Sampled-init codebook ``(sub, code, spos, cw)``: codeword ``j`` of
+    every subspace is vector ``j``'s subvector (ids ``< k``), components
+    nudge-rounded (the one rounding site that previously lacked the house
+    half-boundary bridge — closed in r9 after a Hypothesis property test
+    caught an exact-half divergence). Deterministic by construction — the
+    standard sample-init Lloyd seeds."""
+    return df.filter(F.col(id_col) < k).select(
+        F.col(id_col).cast("int").alias("code"),
         F.posexplode(F.col(vec_col).cast("array<double>")).alias("_pos", "val"),
     ).select(
-        "_id",
         F.expr("_pos div %d" % d_sub).cast("int").alias("sub"),
+        "code",
         (F.col("_pos") % d_sub).cast("int").alias("spos"),
-        "val",
-    )
-
-
-def _nudged_round(c: Column, n: int) -> Column:
-    """House half-boundary bridge (suite/_util.rnd_nudged twin): Spark
-    rounds the shortest-decimal repr HALF_UP while other engines round the
-    binary double, so an exact-half component (e.g. 1.15625 at 4 digits)
-    can round differently across replays. sign(x)·1e-9 moves it off the
-    boundary identically everywhere."""
-    return F.round(c + F.signum(c) * F.lit(1e-9), n) + F.lit(0.0)
-
-
-def init_codebook(parts: DataFrame, k: int, round_digits: int = 4) -> DataFrame:
-    """Sampled-init codebook: codeword ``j`` of every subspace is vector
-    ``j``'s subvector (ids ``< k``), components nudge-rounded (the one
-    rounding site that previously lacked the house half-boundary bridge —
-    closed in r9 after a Hypothesis property test caught an exact-half
-    divergence). Deterministic by construction — the standard sample-init
-    Lloyd seeds."""
-    return parts.filter(F.col("_id") < k).select(
-        "sub",
-        F.col("_id").cast("int").alias("code"),
-        "spos",
-        _nudged_round(F.col("val"), round_digits).alias("cw"),
-    )
-
-
-def _packed(
-    rows: DataFrame, key_cols: list[str], val_col: str, out_col: str
-) -> DataFrame:
-    """Pack scalar component rows back into a per-key DOUBLE array in
-    ascending ``spos`` order (one narrow aggregate)."""
-    return rows.groupBy(*key_cols).agg(
-        F.expr(
-            f"transform(array_sort(collect_list(struct(spos, {val_col}))), "
-            f"s -> s.{val_col})"
-        ).alias(out_col)
+        rnd_nudged(F.col("val"), round_digits).alias("cw"),
     )
 
 
@@ -358,50 +322,6 @@ _ADC_FOLD = (
 )
 
 
-def assign_codes(parts: DataFrame, codebook: DataFrame) -> DataFrame:
-    """Nearest codeword per (vector, subspace): broadcast the codebook,
-    evaluate all k codewords (the inherent PQ N·dim·k product), fold the
-    squared-diff terms in spos order, argmin with code-id tie-break.
-    Returns ``(_id, sub, code, dist)``.
-
-    Physical shape: both sides are packed back into per-subspace DOUBLE
-    arrays so the N·k distance evaluations are ``zip_with`` folds over
-    8-element arrays instead of N·k·d_sub scalar rows through a
-    collect_list aggregate — ~d_sub× fewer shuffled rows, and the argmin
-    is a ``min(struct(dist, code))`` aggregate on the same key as the
-    packing shuffle, so Catalyst plans no second exchange. The fold is
-    the identical ascending-``spos`` left fold from 0.0 (``zip_with``
-    walks index order), so distances stay engine-exact."""
-    subvecs = _packed(parts, ["_id", "sub"], "val", "subvec")
-    cwvecs = _packed(codebook, ["sub", "code"], "cw", "cwvec")
-    dists = subvecs.join(F.broadcast(cwvecs), "sub").select(
-        "_id", "sub", "code",
-        F.expr(
-            "aggregate(zip_with(subvec, cwvec, (a, b) -> (a - b) * (a - b)), "
-            "cast(0.0 as double), (acc, x) -> acc + x)"
-        ).alias("dist"),
-    )
-    best = dists.groupBy("_id", "sub").agg(F.min(F.struct("dist", "code")).alias("_b"))
-    return best.select("_id", "sub", F.col("_b.code").alias("code"), F.col("_b.dist").alias("dist"))
-
-
-def refine_codebook(
-    parts: DataFrame, codebook: DataFrame, assigned: DataFrame, round_digits: int = 4
-) -> DataFrame:
-    """One Lloyd recompute: each codeword moves to the rounded component
-    mean of its members; a codeword with no members keeps its previous
-    position (left-join coalesce — same emptied-cluster rule as
-    :func:`knn.kmeans_iterate` and its oracle)."""
-    means = (
-        assigned.join(parts, ["_id", "sub"])
-        .groupBy("sub", "code", "spos")
-        .agg(_nudged_round(F.avg("val"), round_digits).alias("cw_new"))
-    )
-    return codebook.join(means, ["sub", "code", "spos"], "left").select(
-        "sub", "code", "spos", F.coalesce("cw_new", "cw").alias("cw")
-    )
-
-
 def _refine_kernel(
     df: DataFrame,
     id_col: str,
@@ -434,7 +354,7 @@ def _refine_kernel(
         ),
     )
     means = members.groupBy("sub", "code", "spos").agg(
-        _nudged_round(F.avg("val"), round_digits).alias("cw_new")
+        rnd_nudged(F.avg("val"), round_digits).alias("cw_new")
     )
     return _cb_frame(df.sparkSession, rows).join(
         means, ["sub", "code", "spos"], "left"
@@ -449,17 +369,17 @@ def train_codebook(
     k: int,
     iters: int = 1,
     round_digits: int = 4,
-) -> tuple[DataFrame, DataFrame]:
+) -> list[tuple]:
     """Sample-init + ``iters`` Lloyd refinements per subspace (all
     subspaces train in ONE relational plan — the subspace id is just a
-    grouping column, not a loop). Returns (parts, codebook); ``parts`` is
-    the scalar component view for compat/artifact consumers, while the
-    refinement itself runs through the vectorized assignment kernel."""
-    parts = subvector_parts(df, id_col, vec_col, d_sub)
-    cb = init_codebook(parts, k, round_digits)
+    grouping column, not a loop). Returns the collected codebook, the
+    :func:`_cb_rows` list every consumer takes: the encode kernel's
+    closure, :func:`_cb_frame` for the distance-table leg, or the
+    persisted ``codebook/`` artifact."""
+    cb = init_codebook(df, id_col, vec_col, d_sub, k, round_digits)
     for _ in range(iters):
         cb = _refine_kernel(df, id_col, vec_col, d_sub, cb, round_digits)
-    return parts, cb
+    return _cb_rows(cb)
 
 
 def encode(
@@ -476,8 +396,8 @@ def encode(
     (vector, subspace); ``sub_err`` is the squared reconstruction error of
     the chosen codeword (the quantity PQ training minimizes)."""
     df = _scaled(df)
-    _, cb = train_codebook(df, id_col, vec_col, d_sub, k, iters, round_digits)
-    enc = _encode_vectors_kernel(df, id_col, vec_col, d_sub, cb)
+    rows = train_codebook(df, id_col, vec_col, d_sub, k, iters, round_digits)
+    enc = _encode_vectors_kernel(df, id_col, vec_col, d_sub, rows)
     return enc.select(
         F.col("_id").alias("vec_id"),
         F.posexplode(F.arrays_zip("codes", "dists")).alias("sub", "_z"),
@@ -618,12 +538,10 @@ def ivfpq_residual_adc_topk(
             "_id", "label", F.expr("zip_with(_v, cvec, (a, b) -> a - b)").alias("rvec")
         )
     )
-    cb = init_codebook(subvector_parts(resid, "_id", "rvec", d_sub), k_codes, round_digits)
-    cb = _refine_kernel(resid, "_id", "rvec", d_sub, cb, round_digits)
-    # collect the refined codebook once (driver model state): the encode
-    # kernel takes its closure form, the distance-table leg a
-    # LocalRelation — replaces the old localCheckpoint lineage cut
-    cb_rows = _cb_rows(cb)
+    # the refined codebook is collected once (driver model state): the
+    # encode kernel takes its closure form, the distance-table leg a
+    # LocalRelation
+    cb_rows = train_codebook(resid, "_id", "rvec", d_sub, k_codes, round_digits=round_digits)
     cb = _cb_frame(embeddings.sparkSession, cb_rows)
     # per-vector residual codes, label carried through — no codes⋈labels join
     codes_vec = _encode_vectors_kernel(
@@ -776,18 +694,18 @@ def adc_topk(
     distance table (|Q|·m·k rows — 640 here) is built once and broadcast;
     each corpus vector's approximate distance is the ascending-``sub``
     fold of its m table lookups. Trains in the same plan; for the
-    train-once / search-many shape, persist ``train_codebook`` +
-    ``assign_codes`` output and call :func:`adc_search`. Returns
-    ``(query_id, neighbor_id, adc_dist, rank)`` with rank <= topk."""
+    train-once / search-many shape, persist :func:`train_codebook`'s
+    rows and their :func:`_encode_vectors_kernel` codes (as
+    ``similarity_pq_index_adc_search`` does) and call :func:`adc_search`.
+    Returns ``(query_id, neighbor_id, adc_dist, rank)`` with rank <= topk."""
     df = _scaled(df)
-    _, cb = train_codebook(df, id_col, vec_col, d_sub, k_codes, iters, round_digits)
     # The trained codebook (m·k·d_sub rows, ~1k) is referenced by BOTH the
-    # corpus-encoding leg and the query distance-table leg; collect it
-    # ONCE (driver model state, one tiny job over the training plan) and
-    # hand the encode kernel its closure form and the distance-table leg
-    # a LocalRelation — cheaper than the old localCheckpoint, and no
-    # consumer can replay the training subtree.
-    rows = _cb_rows(cb)
+    # corpus-encoding leg and the query distance-table leg; it comes back
+    # collected ONCE (driver model state, one tiny job over the training
+    # plan): the encode kernel takes its closure form and the
+    # distance-table leg a LocalRelation, so no consumer can replay the
+    # training subtree.
+    rows = train_codebook(df, id_col, vec_col, d_sub, k_codes, iters, round_digits)
     codes_vec = _encode_vectors_kernel(df, id_col, vec_col, d_sub, rows).select(
         "_id", "codes"
     )

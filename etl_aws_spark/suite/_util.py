@@ -8,6 +8,9 @@ import os
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# re-exported: the suite's queries import the operator-level helper from here
+from etl_aws_spark.functions import rnd_nudged  # noqa: F401
+
 _CACHE_ROOT = "/tmp/etl_aws_spark_cache"
 
 
@@ -51,18 +54,8 @@ def sql_rnd(expr: str, n: int = 4) -> str:
     return f"round({expr}, {n}) + 0.0"
 
 
-def rnd_nudged(c: Column, n: int = 4) -> Column:
-    """Nudged rounding bridge for columns measured to land exactly on
-    decimal half-boundaries (SCALE.md §8): Spark rounds the shortest-
-    decimal repr HALF_UP while DuckDB rounds the binary double, so a
-    bit-identical value can round differently. Adding sign(x)·1e-9 —
-    far above any summation jitter, far below data resolution — moves
-    the value off the boundary the same way on BOTH engines. Mirror with
-    :func:`sql_rnd_nudged` in the oracle."""
-    return F.round(c + F.signum(c) * F.lit(1e-9), n) + F.lit(0.0)
-
-
 def sql_rnd_nudged(expr: str, n: int = 4) -> str:
+    """DuckDB mirror of :func:`etl_aws_spark.functions.rnd_nudged`."""
     return f"round(({expr}) + sign({expr}) * 1e-9, {n}) + 0.0"
 
 

@@ -621,9 +621,9 @@ _PQ_DSUB, _PQ_K = 8, 16
 
 # Shared PQ-training CTE chain: subspace parts -> sampled-init codebook ->
 # Lloyd assign/recompute (one refinement, emptied codewords keep their
-# previous position) -> final encoding. Mirrors pq.train_codebook +
-# pq.assign_codes term for term: identical rounded codebooks, identical
-# ascending-spos left folds, identical (dist, code) tie-break.
+# previous position) -> final encoding. Mirrors pq.train_codebook + the
+# pq._pq_assign_kernel encode term for term: identical rounded codebooks,
+# identical ascending-spos left folds, identical (dist, code) tie-break.
 _DUCK_PQ = f"""
     pparts AS (
       SELECT vec_id AS id, CAST((i - 1) // {_PQ_DSUB} AS INT) AS sub,
@@ -792,6 +792,11 @@ def similarity_pq_index_adc_search(spark: SparkSession, sf_dir: str) -> DataFram
     broadcast it over a scan of the codes parquet, rank. The training
     shuffle is amortized over every search, the same argument as
     `similarity_ivf_index_pruned_search` and `sink_bucketed_join_noshuffle`.
+    The build runs the same path as every other PQ query: the codebook
+    artifact is `pq.train_codebook`'s collected rows, and the codes are
+    the Arrow encode kernel's output exploded to (_id, sub, code) — so
+    the at-rest artifacts equal a fresh `pq.train_codebook` /
+    `pq.encode` (tests/test_pq.py pins it).
     Determinism: the persisted codebook stores the already-rounded
     components (the rounded codebook IS the index artifact), so a search
     against the parquet read-back is bit-identical to the full replay."""
@@ -806,14 +811,13 @@ def similarity_pq_index_adc_search(spark: SparkSession, sf_dir: str) -> DataFram
     cb_schema = "sub int, code int, spos int, cw double"
     codes_schema = "_id long, sub int, code int"
     if not _os.path.exists(_os.path.join(codes_path, "_SUCCESS")):
-        parts, cb = pq.train_codebook(
+        rows = pq.train_codebook(
             emb, "vec_id", "embedding", d_sub=_PQ_DSUB, k=_PQ_K, iters=1
         )
-        cb.write.mode("overwrite").parquet(cb_path)
-        cb_at_rest = spark.read.schema(cb_schema).parquet(cb_path)
-        pq.assign_codes(parts, cb_at_rest).select("_id", "sub", "code").write.mode(
-            "overwrite"
-        ).parquet(codes_path)
+        pq._cb_frame(spark, rows).write.mode("overwrite").parquet(cb_path)
+        pq._encode_vectors_kernel(emb, "vec_id", "embedding", _PQ_DSUB, rows).select(
+            "_id", F.posexplode("codes").alias("sub", "code")
+        ).write.mode("overwrite").parquet(codes_path)
 
     codebook = spark.read.schema(cb_schema).parquet(cb_path)
     codes = spark.read.schema(codes_schema).parquet(codes_path)

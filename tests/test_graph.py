@@ -1,5 +1,6 @@
 """Unit tests for distributed connected components."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_aws_spark.operators.graph import connected_components
@@ -23,6 +24,14 @@ def test_long_chain_converges(spark):
     n = 40
     got = _cc(spark, list(range(n)), [(i, i + 1) for i in range(n - 1)])
     assert got == {i: 0 for i in range(n)}
+
+
+def test_exhausted_round_budget_raises(spark):
+    # a 64-vertex path needs far more than one propagation step: returning
+    # the partial closure would split the component silently
+    n = 64
+    with pytest.raises(RuntimeError, match="max_rounds=1 exhausted"):
+        _cc(spark, list(range(n)), [(i, i + 1) for i in range(n - 1)], max_rounds=1)
 
 
 def test_disjoint_components_and_isolated_vertices(spark):

@@ -410,26 +410,26 @@ def test_ivfpq_tables_broadcast_no_cartesian(spark, sf):
     assert plan.count("BroadcastExchange") >= 3, plan
 
 
-def test_pq_assign_packs_arrays_single_exchange(spark, sf):
-    """The r8 PQ repack: distance evaluation must run as zip_with folds
-    over packed per-subspace arrays, and the argmin must ride the packing
-    shuffle's key — Catalyst must NOT plan a second exchange between the
-    subvector packing aggregate and the min(struct) argmin aggregate, and
-    no row_number window over the N·k candidate frame may remain."""
+def test_pq_index_encode_is_one_kernel_no_shuffle(spark, sf):
+    """The persisted PQ index encodes through the Arrow kernel: the codes
+    leg of `similarity_pq_index_adc_search` (the collected codebook in
+    the kernel closure, codes exploded to (_id, sub, code)) must plan
+    exactly one MapInPandas over the scan and no hash exchange — the
+    corpus is never shuffled to be encoded."""
     from pyspark.sql import functions as F
 
     from etl_aws_spark.registry import load
     from etl_aws_spark.similarity import pq
 
     emb = load(spark, sf, "embeddings")
-    parts = pq.subvector_parts(emb, "vec_id", "embedding", 8)
-    cb = pq.init_codebook(parts, 16)
-    plan = _plan(pq.assign_codes(parts, cb))
-    assert "zip_with" in plan, plan
-    # one exchange for packing the corpus side, one for the (tiny)
-    # codebook side; the argmin adds none
-    assert plan.count("Exchange hashpartitioning") <= 2, plan
-    assert "Window" not in plan, plan
+    rows = pq.train_codebook(emb, "vec_id", "embedding", 8, 16)
+    plan = _plan(
+        pq._encode_vectors_kernel(emb, "vec_id", "embedding", 8, rows).select(
+            "_id", F.posexplode("codes").alias("sub", "code")
+        )
+    )
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Exchange hashpartitioning" not in plan, plan
 
 
 def test_dsir_posting_join_shuffles_token_scalars_once(spark, sf):

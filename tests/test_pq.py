@@ -4,6 +4,7 @@ encode validity, ADC recall on clustered data, numpy cross-check."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -27,16 +28,13 @@ def emb(spark):
 
 
 def test_codebook_shape_and_determinism(spark, emb):
-    parts, cb = pq.train_codebook(emb, "vec_id", "embedding", DSUB, K, iters=1)
-    pdf = cb.toPandas()
+    rows = pq.train_codebook(emb, "vec_id", "embedding", DSUB, K, iters=1)
+    pdf = pd.DataFrame(rows, columns=["sub", "code", "spos", "cw"])
     # full m x k x d_sub grid survives refinement (emptied codes persist)
     assert len(pdf) == M * K * DSUB
     assert set(pdf["sub"]) == set(range(M))
     assert set(pdf.code) == set(range(K))
-    pdf2 = pq.train_codebook(emb, "vec_id", "embedding", DSUB, K, iters=1)[1].toPandas()
-    a = pdf.sort_values(["sub", "code", "spos"]).cw.tolist()
-    b = pdf2.sort_values(["sub", "code", "spos"]).cw.tolist()
-    assert a == b
+    assert pq.train_codebook(emb, "vec_id", "embedding", DSUB, K, iters=1) == rows
 
 
 def test_encode_shape_and_code_range(spark, emb):
@@ -56,9 +54,12 @@ def test_lloyd_refinement_reduces_error(spark, emb):
 
 
 def test_assign_matches_numpy_argmin(spark, emb):
-    parts = pq.subvector_parts(emb, "vec_id", "embedding", DSUB)
-    cb = pq.init_codebook(parts, K)
-    got = pq.assign_codes(parts, cb).toPandas().sort_values(["_id", "sub"])
+    cb = pq.init_codebook(emb, "vec_id", "embedding", DSUB, K)
+    got = (
+        pq._encode_vectors_kernel(emb, "vec_id", "embedding", DSUB, cb)
+        .toPandas().sort_values("_id")
+    )
+    codes, dists = np.stack(got.codes.to_numpy()), np.stack(got.dists.to_numpy())
     pdf = emb.toPandas().sort_values("vec_id")
     X = np.array([np.array(v, dtype=np.float64) for v in pdf.embedding])
     CB = np.round(X[:K], 4)  # init codebook = rounded first-K subvectors
@@ -67,8 +68,8 @@ def test_assign_matches_numpy_argmin(spark, emb):
         cs = CB[:, sub * DSUB : (sub + 1) * DSUB]
         d = ((xs[:, None, :] - cs[None, :, :]) ** 2).sum(axis=2)
         want = d.argmin(axis=1)  # numpy argmin breaks ties low, same rule
-        got_sub = got[got["sub"] == sub].sort_values("_id").code.to_numpy()
-        assert (got_sub == want).all()
+        assert (codes[:, sub] == want).all()
+        np.testing.assert_allclose(dists[:, sub], d[np.arange(len(X)), want], rtol=1e-12)
 
 
 def test_adc_topk_finds_query_cluster(spark, emb):
@@ -119,10 +120,14 @@ def test_adc_search_equals_adc_topk(spark, emb):
     # the split search leg against a pre-trained index must reproduce the
     # one-plan adc_topk ranking exactly (same codebook, same codes)
     queries = emb.filter(F.col("vec_id") < 3)
-    parts, cb = pq.train_codebook(emb, "vec_id", "embedding", DSUB, K, iters=1)
-    codes = pq.assign_codes(parts, cb).select("_id", "sub", "code")
+    rows = pq.train_codebook(emb, "vec_id", "embedding", DSUB, K, iters=1)
+    codes = pq._encode_vectors_kernel(emb, "vec_id", "embedding", DSUB, rows).select(
+        "_id", F.posexplode("codes").alias("sub", "code")
+    )
     split = (
-        pq.adc_search(codes, cb, queries, "vec_id", "embedding", DSUB, topk=5)
+        pq.adc_search(
+            codes, pq._cb_frame(spark, rows), queries, "vec_id", "embedding", DSUB, topk=5
+        )
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
     one = (
@@ -172,3 +177,35 @@ def test_ivfpq_recall_bounds_and_rollup(spark, emb_lbl):
     # loses nothing, but K=8-code PQ reorders the tightly-packed
     # within-cluster neighbors — recall well above chance, not perfect
     assert total.recall.iloc[0] >= 0.5
+
+
+def test_persisted_index_equals_fresh_train(spark, emb, tmp_path, monkeypatch):
+    # the at-rest artifacts of similarity_pq_index_adc_search are exactly a
+    # fresh train_codebook (codebook/) and a fresh encode's codes (codes/)
+    from etl_aws_spark.registry import all_queries
+    from etl_aws_spark.suite import _util
+    from etl_aws_spark.suite.q_similarity import _PQ_DSUB, _PQ_K
+
+    sf = str(tmp_path / "data")
+    emb.write.parquet(f"{sf}/embeddings.parquet")
+    monkeypatch.setattr(_util, "_CACHE_ROOT", str(tmp_path / "cache"))
+    all_queries()["similarity_pq_index_adc_search"](spark, sf).collect()
+    index = _util.cache_dir(sf, "pq_index")
+    assert index.startswith(str(tmp_path / "cache"))
+
+    cb_at_rest = sorted(
+        tuple(r) for r in spark.read.parquet(f"{index}/codebook")
+        .select("sub", "code", "spos", "cw").collect()
+    )
+    assert cb_at_rest == pq.train_codebook(emb, "vec_id", "embedding", _PQ_DSUB, _PQ_K)
+
+    codes_at_rest = sorted(
+        tuple(r) for r in spark.read.parquet(f"{index}/codes")
+        .select("_id", "sub", "code").collect()
+    )
+    fresh = sorted(
+        tuple(r) for r in pq.encode(emb, "vec_id", "embedding", _PQ_DSUB, _PQ_K)
+        .select("vec_id", "sub", "code").collect()
+    )
+    assert codes_at_rest == fresh
+    assert len(fresh) == 200 * (DIM // _PQ_DSUB)

@@ -197,10 +197,9 @@ vectors = st.lists(
 @given(vecs=vectors)
 @SET
 def test_pq_assign_codes_match_bruteforce_argmin(spark, vecs):
-    """The packed zip_with assignment must pick, for every (vector,
-    subspace), the codeword with minimal squared distance, code-id
-    tie-break — identical to a naive python argmin over the same rounded
-    codebook."""
+    """The Arrow encode kernel must pick, for every (vector, subspace),
+    the codeword with minimal squared distance, code-id tie-break —
+    identical to a naive python argmin over the same rounded codebook."""
     from etl_aws_spark.similarity import pq
 
     d_sub, k = 4, 2  # 8-dim vectors -> 2 subspaces, 2 codes (ids 0, 1)
@@ -208,11 +207,11 @@ def test_pq_assign_codes_match_bruteforce_argmin(spark, vecs):
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<double>",
     )
-    parts = pq.subvector_parts(df, "vec_id", "embedding", d_sub)
-    cb = pq.init_codebook(parts, k)
+    cb = pq.init_codebook(df, "vec_id", "embedding", d_sub, k)
     got = {
-        (r["_id"], r["sub"]): (r["code"], round(r["dist"], 9))
-        for r in pq.assign_codes(parts, cb).collect()
+        (r["_id"], sub): (code, round(dist, 9))
+        for r in pq._encode_vectors_kernel(df, "vec_id", "embedding", d_sub, cb).collect()
+        for sub, (code, dist) in enumerate(zip(r["codes"], r["dists"]))
     }
     # python reference over the same rounded seeds — replays the engine's
     # nudged HALF_UP (sign(x)*1e-9 off the half boundary, then round away

@@ -10,8 +10,11 @@ Usage: python tools/check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
+import tempfile
 import time
 import traceback
 
@@ -179,6 +182,13 @@ def main() -> int:
 
     import __spark_entry__ as ent
     from etl_aws_spark.session import get_session
+    from etl_aws_spark.suite import _util
+
+    # persisted artifacts (PQ/IVF indexes, stream state) go under a fresh
+    # root per run, so every artifact builder runs and is checked instead
+    # of an index cached by older code being served
+    _util._CACHE_ROOT = tempfile.mkdtemp(prefix="check_cache_")
+    atexit.register(shutil.rmtree, _util._CACHE_ROOT, True)
 
     spark = get_session("check")
     spark.sparkContext.setLogLevel("ERROR")
