@@ -11,7 +11,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -73,19 +72,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from etl_aws_spark.operators.windows import glue_feature_block
-    from etl_aws_spark.registry import all_queries
     from etl_aws_spark.session import get_session
-    from etl_aws_spark.sources.readers import read_table
+    from tools.timing import best_of, queries
 
     spark = get_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def q_feature_block(spark, d):
-        return glue_feature_block(read_table(spark, d, "events"), "value", "user_id", ["ts", "event_id"])
-
-    queries = dict(all_queries())
-    queries["q_feature_block"] = q_feature_block
+    qs = queries()
 
     # best-of-N: a single post-warmup iteration cannot distinguish a plan
     # regression from a noisy sandbox (the r3 episode: uniform ~1.8x
@@ -103,43 +95,28 @@ def main() -> None:
     # "this query regressed" without a re-measure cycle.
     CANARY = "agg_group_generic"
     CANARY_REFERENCE_SEC = 0.292  # BENCH_r08 uncontended best-of-3
-    cfn = queries[CANARY]
-
-    def run_canary() -> list[float]:
-        cfn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-        runs = []
-        for _ in range(repeats):
-            t0 = time.time()
-            cfn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.time() - t0, 3))
-        return runs
+    cfn = qs[CANARY]
 
     # pre-run canary: measured r10 ~2x slower than the SAME query mid-run
     # (whole-JVM C2 warmup, not sandbox phase) — kept for the warmup
     # delta, NOT used for normalization
-    canary_pre_runs = run_canary()
+    canary_pre_runs = best_of(spark, cfn, sf_dir, repeats)
     print(f"  canary-pre {CANARY}: best={min(canary_pre_runs)}", file=sys.stderr)
 
     timings: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
     for name in HEADLINE:
-        fn = queries.get(name)
+        fn = qs.get(name)
         if fn is None:
             continue
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()  # warm (plan + JIT + page cache)
-        runs = []
-        for _ in range(repeats):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.time() - t0, 3))
+        runs = best_of(spark, fn, sf_dir, repeats)
         timings[name] = min(runs)
         spreads[name] = runs
         print(f"  {name}: best={min(runs)} runs={runs}", file=sys.stderr)
 
     # post-run canary at JVM steady state: THIS is the sandbox-phase
     # calibration (VERDICT r9 #5) — normalize per-query walls by it
-    canary_runs = run_canary()
+    canary_runs = best_of(spark, cfn, sf_dir, repeats)
     canary_sec = min(canary_runs)
     phase_factor = round(canary_sec / CANARY_REFERENCE_SEC, 3)
     print(

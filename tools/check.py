@@ -13,6 +13,7 @@ from __future__ import annotations
 import atexit
 import os
 import shutil
+import signal
 import sys
 import tempfile
 import time
@@ -184,6 +185,9 @@ def main() -> int:
     from etl_aws_spark.session import get_session
     from etl_aws_spark.suite import _util
 
+    # a stopped run must still remove its cache dir: atexit does not run
+    # when a signal kills the process, but it does run on SystemExit
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     # persisted artifacts (PQ/IVF indexes, stream state) go under a fresh
     # root per run, so every artifact builder runs and is checked instead
     # of an index cached by older code being served
