@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_aws_spark.streaming import ingest
 from etl_aws_spark.streaming.state import VersionedState
 
 
@@ -87,7 +88,6 @@ def run_clustering_pass(
     ckpt: str,
     num_hashes: int = 16,
     bands: int = 4,
-    timeout_s: int = 300,
 ) -> None:
     """One ``availableNow`` pass: every landed file not yet marked in
     ``ckpt`` folds into the latest committed clustering version. Safe to
@@ -164,16 +164,13 @@ def run_clustering_pass(
             T.StructField("text", T.StringType()),
         ]
     )
-    q = (
+    ingest.run_available_now(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
         .writeStream.foreachBatch(fold_batch)
-        .trigger(availableNow=True)
         .option("checkpointLocation", ckpt)
-        .start()
     )
-    q.awaitTermination(timeout_s)
 
 
 def compact_state(spark: SparkSession, state: str) -> int:

@@ -8,7 +8,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
 from etl_aws_spark import fsutil
@@ -35,7 +35,7 @@ from etl_aws_spark import fsutil
 # downstream reader. Crash windows: mid-version-write → record absent, the
 # replay overwrites the partial dir; between record and publish →
 # `_committed_batch_id` sees the still-present version dir and finishes
-# the flip (healing is idempotent, and on this availableNow/foreachBatch
+# the publish (healing is idempotent, and on this availableNow/foreachBatch
 # lifecycle no reader races the sink). A replayed batch (batch_id <=
 # committed) is skipped instead of double-merged — the batch-split
 # invariance that cell-wise CMS addition and 'latest-by' upserts
@@ -57,6 +57,11 @@ from etl_aws_spark import fsutil
 
 _COMMIT_RE = re.compile(r"^b(\d+)$")
 
+# How long `run_available_now` waits for a run to finish before it stops
+# the query and fails: a fixture-sized catch-up finishes in seconds, so a
+# run still going after this is stuck, and its sink holds a partial state.
+RUN_TIMEOUT_S = 300
+
 
 def _committed_batch_id(spark: SparkSession, state_path: str) -> int | None:
     """batch_id of the newest committed state version (None if no state),
@@ -71,7 +76,7 @@ def _committed_batch_id(spark: SparkSession, state_path: str) -> int | None:
     done = max(ids)
     vdir = posixpath.join(state_path + ".versions", "v%012d" % done)
     if fsutil.exists(spark, vdir):
-        # committed but not yet published: finish the flip
+        # committed but not yet published: finish the publish
         fsutil.rmtree(spark, state_path)
         fsutil.rename(spark, vdir, state_path)
     return done
@@ -213,6 +218,52 @@ def stream_stream_time_join(
     )
 
 
+def run_available_now(writer: DataStreamWriter) -> None:
+    """Start ``writer`` with the availableNow trigger and wait for it to
+    process everything present at start. A query that fails raises its
+    ``StreamingQueryException``; one still running after
+    ``RUN_TIMEOUT_S`` is stopped and raises ``TimeoutError`` — its sink
+    holds a partial result, which no caller may read as the answer."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(RUN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"availableNow query {q.name or q.id} still running after "
+            f"{RUN_TIMEOUT_S} s; stopped"
+        )
+
+
+def _merge_state_stream(
+    stream_df: DataFrame,
+    state_path: str,
+    partial: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
+    checkpoint: str | None,
+) -> None:
+    """Run ``stream_df`` to the end, folding it into the bounded parquet
+    state at ``state_path``: each micro-batch reduces itself with
+    ``partial``; when a state is published, ``merge`` re-reduces the union
+    of that partial with it. The result commits through the versioned-dir
+    + rename-publish protocol (`_commit_state`), and a replayed batch_id
+    is skipped, so ``merge`` need not be idempotent."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        done = _committed_batch_id(spark, state_path)
+        if done is not None and batch_id <= done:
+            return  # at-least-once replay of an already-merged batch
+        g = partial(batch_df)
+        if fsutil.exists(spark, posixpath.join(state_path, "_SUCCESS")):
+            prev = spark.read.parquet(state_path).select(*g.columns)
+            g = merge(g.unionByName(prev))
+        _commit_state(g, state_path, batch_id)
+
+    writer = stream_df.writeStream.foreachBatch(sink)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    run_available_now(writer)
+
+
 def merge_into_refined(
     stream_df: DataFrame,
     refined_path: str,
@@ -220,7 +271,7 @@ def merge_into_refined(
     transform: Callable[[DataFrame], DataFrame] | None = None,
     checkpoint: str | None = None,
     mode: str = "overwrite",
-) -> StreamingQuery:
+) -> None:
     """foreachBatch merge: each micro-batch runs the (batch) transform and
     dynamic-partition-overwrites only the partitions it touches — the
     streaming twin of the glue.py write with the clobbering fixed
@@ -245,10 +296,10 @@ def merge_into_refined(
             writer = writer.option("partitionOverwriteMode", "dynamic")
         writer.partitionBy(*partition_cols).parquet(refined_path)
 
-    writer = stream_df.writeStream.foreachBatch(sink).trigger(availableNow=True)
+    writer = stream_df.writeStream.foreachBatch(sink)
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    run_available_now(writer)
 
 
 def upsert_latest_state(
@@ -257,7 +308,7 @@ def upsert_latest_state(
     keys: Sequence[str],
     order_cols: Sequence[str],
     checkpoint: str | None = None,
-) -> StreamingQuery:
+) -> None:
     """foreachBatch keyed upsert: maintain a parquet state table holding the
     LATEST row per key (CDC compaction as a stream).
 
@@ -265,7 +316,7 @@ def upsert_latest_state(
     ``order_cols`` ordering, (2) unions the existing state, (3) re-collapses
     and atomically replaces the state. The batch-side collapse first means
     the expensive merge window only ever sees |keys| + |batch keys| rows,
-    never raw updates. Commits go through the versioned-dir + symlink-flip
+    never raw updates. Commits go through the versioned-dir + rename-publish
     protocol (`_commit_state`): the merged frame writes to a FRESH version
     dir (so the lazy read of the old state never races its own overwrite)
     and replayed batch_ids are skipped. Deterministic under ANY batch split:
@@ -288,21 +339,7 @@ def upsert_latest_state(
             .drop("_rn")
         )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        done = _committed_batch_id(spark, state_path)
-        if done is not None and batch_id <= done:
-            return  # at-least-once replay of an already-merged batch
-        merged = latest(batch_df)
-        if fsutil.exists(spark, posixpath.join(state_path, "_SUCCESS")):
-            prev = spark.read.parquet(state_path).select(*merged.columns)
-            merged = latest(merged.unionByName(prev))
-        _commit_state(merged, state_path, batch_id)
-
-    writer = stream_df.writeStream.foreachBatch(sink).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    _merge_state_stream(stream_df, state_path, latest, latest, checkpoint)
 
 
 def cms_merge_stream(
@@ -312,14 +349,14 @@ def cms_merge_stream(
     depth: int = 4,
     width: int = 32,
     checkpoint: str | None = None,
-) -> StreamingQuery:
+) -> None:
     """foreachBatch count-min maintenance: each micro-batch aggregates its
     OWN (depth, bucket) partial grid and merges it into the parquet state
     by cell-wise addition — the mergeability that makes a CMS the right
     streaming frequency sketch (state is depth·width longs FOREVER,
     independent of stream length or key cardinality, and addition is
     associative so ANY batch split converges to the batch-built grid —
-    the invariant the batch-parity oracle checks — and the symlink-flip
+    the invariant the batch-parity oracle checks — and the rename-publish
     commit with a batch_id replay guard keeps it true under foreachBatch's
     at-least-once retries and mid-write crashes). The ingest side never
     sees per-key state; exact counts exist only in the offline accuracy
@@ -347,25 +384,12 @@ def cms_merge_stream(
             F.count(F.lit(1)).cast("long").alias("cell_n")
         )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        done = _committed_batch_id(spark, state_path)
-        if done is not None and batch_id <= done:
-            return  # at-least-once replay: this grid is already merged
-        g = grid_of(batch_df)
-        if fsutil.exists(spark, posixpath.join(state_path, "_SUCCESS")):
-            prev = spark.read.parquet(state_path).select(*g.columns)
-            g = (
-                g.unionByName(prev)
-                .groupBy("depth", "bucket")
-                .agg(F.sum("cell_n").cast("long").alias("cell_n"))
-            )
-        _commit_state(g, state_path, batch_id)
+    def add(g: DataFrame) -> DataFrame:
+        return g.groupBy("depth", "bucket").agg(
+            F.sum("cell_n").cast("long").alias("cell_n")
+        )
 
-    writer = stream_df.writeStream.foreachBatch(sink).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    _merge_state_stream(stream_df, state_path, grid_of, add, checkpoint)
 
 
 def hll_merge_stream(
@@ -375,37 +399,25 @@ def hll_merge_stream(
     group_cols: list[str],
     p: int = 8,
     checkpoint: str | None = None,
-) -> StreamingQuery:
+) -> None:
     """foreachBatch HyperLogLog maintenance: each micro-batch builds its
     OWN (group…, j, m_reg) register partial and merges it into the parquet
     state by register-wise MAX — the lossless HLL union. Max-merge is
     associative AND idempotent, so any batch split (and even a replayed
     merge) converges to the batch-built register table — the invariant
-    the batch-parity oracle checks; the symlink-flip commit with a
+    the batch-parity oracle checks; the rename-publish commit with a
     batch_id replay guard covers mid-write crashes. State is at most
     |groups|·2^p rows forever, independent of stream length or key
     cardinality."""
     from etl_aws_spark.operators.sketch import hll_registers
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        done = _committed_batch_id(spark, state_path)
-        if done is not None and batch_id <= done:
-            return  # at-least-once replay: max-merge is idempotent anyway
-        g = hll_registers(batch_df, key_col, group_cols, p)
-        if fsutil.exists(spark, posixpath.join(state_path, "_SUCCESS")):
-            prev = spark.read.parquet(state_path).select(*g.columns)
-            g = (
-                g.unionByName(prev)
-                .groupBy(*group_cols, "j")
-                .agg(F.max("m_reg").alias("m_reg"))
-            )
-        _commit_state(g, state_path, batch_id)
-
-    writer = stream_df.writeStream.foreachBatch(sink).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    _merge_state_stream(
+        stream_df,
+        state_path,
+        lambda df: hll_registers(df, key_col, group_cols, p),
+        lambda g: g.groupBy(*group_cols, "j").agg(F.max("m_reg").alias("m_reg")),
+        checkpoint,
+    )
 
 
 def kmv_merge_stream(
@@ -415,7 +427,7 @@ def kmv_merge_stream(
     group_cols: list[str],
     k: int = 64,
     checkpoint: str | None = None,
-) -> StreamingQuery:
+) -> None:
     """foreachBatch KMV (bottom-k) maintenance: each micro-batch builds its
     own k-min-hash partial and merges into the parquet state by KEEPING THE
     k SMALLEST of the union — the bottom-k merge, associative and
@@ -428,28 +440,22 @@ def kmv_merge_stream(
 
     from etl_aws_spark.operators.sketch import kmv_sketch
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        done = _committed_batch_id(spark, state_path)
-        if done is not None and batch_id <= done:
-            return  # at-least-once replay: bottom-k merge is idempotent
-        g = kmv_sketch(batch_df, key_col, group_cols, k)
-        if fsutil.exists(spark, posixpath.join(state_path, "_SUCCESS")):
-            prev = spark.read.parquet(state_path).select(*g.columns)
-            w = Window.partitionBy(*group_cols).orderBy("h")
-            g = (
-                g.unionByName(prev)
-                .distinct()
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= k)
-                .drop("_rn")
-            )
-        _commit_state(g, state_path, batch_id)
+    def bottom_k(g: DataFrame) -> DataFrame:
+        w = Window.partitionBy(*group_cols).orderBy("h")
+        return (
+            g.distinct()
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= k)
+            .drop("_rn")
+        )
 
-    writer = stream_df.writeStream.foreachBatch(sink).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    _merge_state_stream(
+        stream_df,
+        state_path,
+        lambda df: kmv_sketch(df, key_col, group_cols, k),
+        bottom_k,
+        checkpoint,
+    )
 
 
 def bloom_merge_stream(
@@ -460,7 +466,7 @@ def bloom_merge_stream(
     m_bits: int = 8192,
     n_hashes: int = 2,
     checkpoint: str | None = None,
-) -> StreamingQuery:
+) -> None:
     """foreachBatch BLOOM-FILTER maintenance: each micro-batch builds its
     own packed-word partial (the `operators.sketch.bloom_bits` position
     family: md5-derived positions, 32-bit lanes so DuckDB's checked shift
@@ -474,11 +480,10 @@ def bloom_merge_stream(
     never touch the raw log."""
     from etl_aws_spark.text import _dialect as D
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        done = _committed_batch_id(spark, state_path)
-        if done is not None and batch_id <= done:
-            return  # at-least-once replay: bit_or merge is idempotent
+    def or_words(g: DataFrame) -> DataFrame:
+        return g.groupBy(*group_cols, "word_idx").agg(F.bit_or("word").alias("word"))
+
+    def words_of(df: DataFrame) -> DataFrame:
         pos_exprs = [
             F.expr(
                 "(%s) %% %d"
@@ -486,11 +491,9 @@ def bloom_merge_stream(
             )
             for j in range(n_hashes)
         ]
-        keys = batch_df.select(
-            *group_cols, F.col(key_col).cast("string").alias("key")
-        )
+        keys = df.select(*group_cols, F.col(key_col).cast("string").alias("key"))
         pos = keys.select(*group_cols, F.explode(F.array(*pos_exprs)).alias("p"))
-        g = (
+        return or_words(
             pos.select(
                 *group_cols,
                 F.expr("p div 32").cast("int").alias("word_idx"),
@@ -498,22 +501,9 @@ def bloom_merge_stream(
                     "shiftleft(cast(1 as bigint), cast(p % 32 as int))"
                 ).alias("word"),
             )
-            .groupBy(*group_cols, "word_idx")
-            .agg(F.bit_or("word").alias("word"))
         )
-        if fsutil.exists(spark, posixpath.join(state_path, "_SUCCESS")):
-            prev = spark.read.parquet(state_path).select(*g.columns)
-            g = (
-                g.unionByName(prev)
-                .groupBy(*group_cols, "word_idx")
-                .agg(F.bit_or("word").alias("word"))
-            )
-        _commit_state(g, state_path, batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(sink).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    _merge_state_stream(stream_df, state_path, words_of, or_words, checkpoint)
 
 
 def hdr_merge_stream(
@@ -522,14 +512,14 @@ def hdr_merge_stream(
     value_col: str,
     group_cols: list[str],
     checkpoint: str | None = None,
-) -> StreamingQuery:
+) -> None:
     """foreachBatch HDR-HISTOGRAM maintenance: each micro-batch buckets
     its values into log2 cells of exact integer cents (bucket = bit
     length — no transcendental) and merges into the parquet state by
     cell-wise ADDITION — the mergeable quantile state (~27 integer cells
     per group FOREVER) that replaces a full sort for p50/p99 readouts.
     Addition is associative so any batch split converges to the
-    batch-built histogram, and the symlink-flip commit's batch_id guard
+    batch-built histogram, and the rename-publish commit's batch_id guard
     keeps the sum exact under at-least-once retries (the
     `cms_merge_stream` discipline)."""
 
@@ -544,25 +534,10 @@ def hdr_merge_stream(
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        done = _committed_batch_id(spark, state_path)
-        if done is not None and batch_id <= done:
-            return  # at-least-once replay: already merged
-        g = hist_of(batch_df)
-        if fsutil.exists(spark, posixpath.join(state_path, "_SUCCESS")):
-            prev = spark.read.parquet(state_path).select(*g.columns)
-            g = (
-                g.unionByName(prev)
-                .groupBy(*group_cols, "bucket")
-                .agg(F.sum("n").cast("long").alias("n"))
-            )
-        _commit_state(g, state_path, batch_id)
+    def add(g: DataFrame) -> DataFrame:
+        return g.groupBy(*group_cols, "bucket").agg(F.sum("n").cast("long").alias("n"))
 
-    writer = stream_df.writeStream.foreachBatch(sink).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    _merge_state_stream(stream_df, state_path, hist_of, add, checkpoint)
 
 
 def ivf_assign_stream(
@@ -573,7 +548,7 @@ def ivf_assign_stream(
     vec_col: str,
     dim: int,
     checkpoint: str | None = None,
-) -> StreamingQuery:
+) -> None:
     """foreachBatch IVF-INDEX MAINTENANCE: embedding vectors arrive as a
     stream, each micro-batch assigns its vectors to the nearest cell of a
     STATIC broadcast coarse quantizer ``cents`` (label, centroid) — tie
@@ -590,7 +565,7 @@ def ivf_assign_stream(
     cell occupancy and centroid drift — answers "is the persisted coarse
     quantizer still representative of the arriving data", the index-health
     monitor an embedding ingest pipeline runs continuously. Same commit
-    discipline as every sketch sink here (versioned dir + symlink flip,
+    discipline as every sketch sink here (versioned dir + rename-publish,
     batch_id replay guard)."""
     from pyspark.sql import Window
 
@@ -625,25 +600,10 @@ def ivf_assign_stream(
             F.count(F.lit(1)).cast("long").alias("n"),
         )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        done = _committed_batch_id(spark, state_path)
-        if done is not None and batch_id <= done:
-            return  # at-least-once replay: already merged
-        g = grid_of(batch_df)
-        if fsutil.exists(spark, posixpath.join(state_path, "_SUCCESS")):
-            prev = spark.read.parquet(state_path).select(*g.columns)
-            g = (
-                g.unionByName(prev)
-                .groupBy("cell", "pos")
-                .agg(
-                    F.sum("ssum").cast("long").alias("ssum"),
-                    F.sum("n").cast("long").alias("n"),
-                )
-            )
-        _commit_state(g, state_path, batch_id)
+    def add(g: DataFrame) -> DataFrame:
+        return g.groupBy("cell", "pos").agg(
+            F.sum("ssum").cast("long").alias("ssum"),
+            F.sum("n").cast("long").alias("n"),
+        )
 
-    writer = stream_df.writeStream.foreachBatch(sink).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    _merge_state_stream(stream_df, state_path, grid_of, add, checkpoint)

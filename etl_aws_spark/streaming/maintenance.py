@@ -46,6 +46,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import WindowSpec
 
 from etl_aws_spark import fsutil
+from etl_aws_spark.streaming import ingest
 from etl_aws_spark.streaming.state import VersionedState
 
 # The two state trees' declared schemas, next to their writers: reads pass
@@ -141,7 +142,6 @@ def run_maintenance_pass(
     dim: int,
     k: int = 5,
     budget: int = 200,
-    timeout_s: int = 300,
 ) -> None:
     """One ``availableNow`` pass of the maintenance stream: every landed
     file not yet marked processed in ``ckpt`` folds into the latest
@@ -221,16 +221,13 @@ def run_maintenance_pass(
 
     # landed files carry the corpus columns without the pool flag
     landed = T.StructType([f for f in CORPUS.fields if f.name != "in_pool"])
-    q = (
+    ingest.run_available_now(
         spark.readStream.schema(landed)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
         .writeStream.foreachBatch(fold_batch)
-        .trigger(availableNow=True)
         .option("checkpointLocation", ckpt)
-        .start()
     )
-    q.awaitTermination(timeout_s)
 
 
 def compact_state(spark: SparkSession, state: str) -> int:

@@ -61,14 +61,13 @@ def streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not fsutil.exists(spark, refined_p):
         stream = ingest.read_stream(spark, landing, schema)
         deduped = ingest.dedup_with_watermark(stream, "ts", ["event_id"])
-        q = ingest.merge_into_refined(
+        ingest.merge_into_refined(
             deduped,
             refined_p,
             partition_cols=["dia"],
             transform=lambda df: df.withColumn("dia", F.dayofmonth("ts")),
             checkpoint=ckpt,
         )
-        q.awaitTermination(300)
     return spark.read.parquet(refined_p).select("event_id", "user_id", "dia")
 
 
@@ -125,14 +124,11 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "sesswin_" + os.path.basename(os.path.dirname(root))
     stream = ingest.read_stream(spark, landing, schema)
     agg = ingest.session_window_stats(stream, "ts", "user_id", gap="1 hour")
-    q = (
+    ingest.run_available_now(
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
     return spark.table(name).select(
         "user_id", "session_start", "session_end", "n_events",
         (F.round(F.col("sum_value"), 4) + F.lit(0.0)).alias("sum_value"),
@@ -193,11 +189,11 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-query streaming override — the set/restore below is safe only
     # because the gate (and bench.py) run queries serially on this session;
     # a concurrently-planned query would observe the temporary value. The
-    # finally clause restores it even if start() throws.
+    # finally clause restores it even if the run throws.
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (
+        ingest.run_available_now(
             joined.select(
                 "click_id", "purchase_id",
                 F.col("l.key_u").alias("user_id"),
@@ -207,10 +203,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
@@ -252,14 +245,11 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "wincounts_" + os.path.basename(os.path.dirname(root))
     stream = ingest.read_stream(spark, landing, schema)
     agg = ingest.windowed_counts(stream, "ts", "user_id", window="1 day", late="3 days")
-    q = (
+    ingest.run_available_now(
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
     return spark.table(name).select(
         F.to_date("window_start").cast("timestamp").alias("day"),
         "user_id",
@@ -314,14 +304,11 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day"), "c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
     )
-    q = (
+    ingest.run_available_now(
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
     return spark.table(name).select(
         F.col("window.start").alias("day"),
         "c_mktsegment",
@@ -377,11 +364,10 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "3")
             .parquet(landing)
         )
-        q = ingest.upsert_latest_state(
+        ingest.upsert_latest_state(
             stream, state_p, keys=["user_id"], order_cols=["ts", "event_id"],
             checkpoint=ckpt,
         )
-        q.awaitTermination(300)
     st = spark.read.parquet(state_p)
     return st.select(
         "user_id",
@@ -443,20 +429,40 @@ def streaming_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFra
         .groupBy(F.window("ts", "1 day", "12 hours"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
     )
-    q = (
+    ingest.run_available_now(
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
     return spark.table(name).select(
         F.col("window.start").alias("window_start"),
         "event_type",
         F.col("n").cast("bigint").alias("n"),
         (F.round(F.col("sum_value"), 4) + F.lit(0.0)).alias("sum_value"),
     )
+
+
+def _events_stream(
+    spark: SparkSession, sf_dir: str, layout: str, schema: T.StructType
+) -> tuple[DataFrame, str]:
+    """The events-sketch fixture: land the ``schema`` columns of `events`
+    once as 8 files under ``layout``, reset the sketch state beside them,
+    and stream the landing 3 files per trigger, so every sketch merges
+    across several micro-batches. Returns (stream, state path)."""
+    root = _cache_dir(sf_dir, layout)
+    landing = os.path.join(root, "landing")
+    state = os.path.join(root, "state")
+    if not fsutil.exists(spark, os.path.join(landing, "_SUCCESS")):
+        fsutil.rmtree(spark, root)
+        ev = load(spark, sf_dir, "events").select(*schema.fieldNames())
+        ev.repartition(8).write.mode("overwrite").parquet(landing)
+    ingest.reset_state(spark, state)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 3)
+        .parquet(landing)
+    )
+    return stream, state
 
 
 def _cms_grid_oracle() -> str:
@@ -487,27 +493,14 @@ def streaming_sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     must EQUAL the batch-built one regardless of batch boundaries, which
     is exactly what the batch oracle value-checks. The streaming twin of
     `sketch_count_min_freq`'s offline accuracy harness."""
-    root = _cache_dir(sf_dir, "stream_cms")
-    landing = os.path.join(root, "landing")
-    state = os.path.join(root, "state")
-    if not fsutil.exists(spark, os.path.join(landing, "_SUCCESS")):
-        fsutil.rmtree(spark, root)
-        ev = load(spark, sf_dir, "events").select("event_id", "user_id")
-        ev.repartition(8).write.mode("overwrite").parquet(landing)
-    ingest.reset_state(spark, state)
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),
             T.StructField("user_id", T.LongType()),
         ]
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 3)
-        .parquet(landing)
-    )
-    q = ingest.cms_merge_stream(stream, state, "user_id", depth=4, width=32)
-    q.awaitTermination(300)
+    stream, state = _events_stream(spark, sf_dir, "stream_cms", schema)
+    ingest.cms_merge_stream(stream, state, "user_id", depth=4, width=32)
     return spark.read.parquet(state).select(
         F.col("depth").cast("int").alias("depth"),
         F.col("bucket").cast("long").alias("bucket"),
@@ -538,7 +531,7 @@ def streaming_corpus_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     `upsert_latest_state` unchanged: keep-first(min doc_id) is
     latest-by(-doc_id), which is associative, so the state is independent
     of how the corpus was split into micro-batches — and the versioned
-    symlink-flip commit (streaming/ingest.py) makes it exact under
+    rename-publish commit (streaming/ingest.py) makes it exact under
     at-least-once retries. The oracle is the ONE-SHOT batch dedup over
     the full corpus: stream/batch parity, value-hashed. This is the
     streaming twin of `text_dedup_exact` — what a production pipeline
@@ -568,11 +561,10 @@ def streaming_corpus_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("text_digest"),
             (-F.col("doc_id")).alias("_neg_id"),
         )
-        q = ingest.upsert_latest_state(
+        ingest.upsert_latest_state(
             stream, state_p, keys=["text_digest"], order_cols=["_neg_id"],
             checkpoint=ckpt,
         )
-        q.awaitTermination(300)
     st = spark.read.parquet(state_p)
     return st.select(F.col("doc_id").cast("long").alias("doc_id"), "text_digest")
 
@@ -757,14 +749,11 @@ def streaming_ewma_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(schema).parquet(landing)
     out = stateful.ewma_stateful(stream, "user_id", "ts", "value", span=12)
     name = "ewma_stateful_" + os.path.basename(os.path.dirname(root))
-    q = (
+    ingest.run_available_now(
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
     return spark.table(name).select(
         "key",
         "ts",
@@ -873,14 +862,11 @@ def streaming_topk_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "topk_state_" + os.path.basename(os.path.dirname(root))
-    q = (
+    ingest.run_available_now(
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
     # append mode emits each key's running top-k once per batch it appears
     # in; ranks only improve as data accumulates, so max per (user, rank)
     # IS the final state
@@ -947,14 +933,11 @@ def streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.col("w.start").alias("day"), "n_events"
             ).write.mode("append").parquet(updates)
 
-        q = (
+        ingest.run_available_now(
             agg.writeStream.foreachBatch(emit)
             .outputMode("update")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
 
     if not fsutil.exists(spark, os.path.join(root, "_DONE")):
         fsutil.rmtree(spark, root)
@@ -1003,7 +986,7 @@ def streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch's first segment inherits the open version's valid_from),
     CLOSES (attribute changed: valid_to = the batch's first change), or
     passes through untouched (user absent from the batch). State commits
-    ride the atomic symlink protocol with the batch-id replay guard
+    ride the atomic rename-publish protocol with the batch-id replay guard
     (exactly-once under retries), and the landing is three
     event-time-ordered files with maxFilesPerTrigger=1, so the merge
     logic genuinely exercises version extension and closure across
@@ -1012,7 +995,6 @@ def streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per batch the work is O(batch + affected versions), never a history
     re-read."""
     from etl_aws_spark.operators import changedata as cd
-    from etl_aws_spark.streaming import ingest as ing
 
     root = _cache_dir(sf_dir, "stream_scd2")
     landing = os.path.join(root, "landing")
@@ -1037,7 +1019,7 @@ def streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def merge(batch_df, batch_id):
-        done = ing._committed_batch_id(spark, state)
+        done = ingest._committed_batch_id(spark, state)
         if done is not None and batch_id <= done:
             return
         bseg = cd.scd2_from_log(
@@ -1102,20 +1084,16 @@ def streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         new_state = closed_prev.unionByName(kept_open).unionByName(bseg_adj)
-        ing._commit_state(new_state, state, batch_id)
+        ingest._commit_state(new_state, state, batch_id)
 
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(landing)
     )
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    ingest.run_available_now(
+        stream.writeStream.foreachBatch(merge).option("checkpointLocation", ckpt)
     )
-    q.awaitTermination(300)
     out = spark.read.parquet(state)
     return out.select(
         "user_id",
@@ -1173,27 +1151,14 @@ def streaming_sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
     sketch kept as stream state beside the count-min grid and the top-k
     map: distinct-user dashboards over an unbounded event stream in
     O(types·m) state, no raw-id retention."""
-    root = _cache_dir(sf_dir, "stream_hll")
-    landing = os.path.join(root, "landing")
-    state = os.path.join(root, "state")
-    if not fsutil.exists(spark, os.path.join(landing, "_SUCCESS")):
-        fsutil.rmtree(spark, root)
-        ev = load(spark, sf_dir, "events").select("event_type", "user_id")
-        ev.repartition(8).write.mode("overwrite").parquet(landing)
-    ingest.reset_state(spark, state)
     schema = T.StructType(
         [
             T.StructField("event_type", T.StringType()),
             T.StructField("user_id", T.LongType()),
         ]
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 3)
-        .parquet(landing)
-    )
-    q = ingest.hll_merge_stream(stream, state, "user_id", ["event_type"], p=8)
-    q.awaitTermination(300)
+    stream, state = _events_stream(spark, sf_dir, "stream_hll", schema)
+    ingest.hll_merge_stream(stream, state, "user_id", ["event_type"], p=8)
     from etl_aws_spark.operators.sketch import hll_fold
 
     regs = spark.read.parquet(state)
@@ -1246,27 +1211,14 @@ def streaming_sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
     count-min grid, top-k map came first), and the one whose retained
     hashes keep supporting SET ALGEBRA (`agg_kmv_jaccard_pairs`) after any
     amount of streaming — O(types·k) state, no raw-id retention."""
-    root = _cache_dir(sf_dir, "stream_kmv")
-    landing = os.path.join(root, "landing")
-    state = os.path.join(root, "state")
-    if not fsutil.exists(spark, os.path.join(landing, "_SUCCESS")):
-        fsutil.rmtree(spark, root)
-        ev = load(spark, sf_dir, "events").select("event_type", "user_id")
-        ev.repartition(8).write.mode("overwrite").parquet(landing)
-    ingest.reset_state(spark, state)
     schema = T.StructType(
         [
             T.StructField("event_type", T.StringType()),
             T.StructField("user_id", T.LongType()),
         ]
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 3)
-        .parquet(landing)
-    )
-    q = ingest.kmv_merge_stream(stream, state, "user_id", ["event_type"], k=64)
-    q.awaitTermination(300)
+    stream, state = _events_stream(spark, sf_dir, "stream_kmv", schema)
+    ingest.kmv_merge_stream(stream, state, "user_id", ["event_type"], k=64)
     from etl_aws_spark.operators.sketch import kmv_estimate
 
     sk = spark.read.parquet(state)
@@ -1346,14 +1298,11 @@ def streaming_kalman_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(schema).parquet(landing)
     out = stateful.kalman_stateful(stream, "user_id", "ts", "value")
     name = "kalman_stateful_" + os.path.basename(os.path.dirname(root))
-    q = (
+    ingest.run_available_now(
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
     return spark.table(name).select(
         "key",
         "ts",
@@ -1421,29 +1370,16 @@ def streaming_sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataF
     map-side-combined bit_or; the merge touches state rows only. The
     prefilter consumer (`join_bloom_prefilter`) shows what the filter
     buys at the shuffle."""
-    root = _cache_dir(sf_dir, "stream_bloom")
-    landing = os.path.join(root, "landing")
-    state = os.path.join(root, "state")
-    if not fsutil.exists(spark, os.path.join(landing, "_SUCCESS")):
-        fsutil.rmtree(spark, root)
-        ev = load(spark, sf_dir, "events").select("event_type", "user_id")
-        ev.repartition(8).write.mode("overwrite").parquet(landing)
-    ingest.reset_state(spark, state)
     schema = T.StructType(
         [
             T.StructField("event_type", T.StringType()),
             T.StructField("user_id", T.LongType()),
         ]
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 3)
-        .parquet(landing)
-    )
-    q = ingest.bloom_merge_stream(
+    stream, state = _events_stream(spark, sf_dir, "stream_bloom", schema)
+    ingest.bloom_merge_stream(
         stream, state, "user_id", ["event_type"], m_bits=8192, n_hashes=2
     )
-    q.awaitTermination(300)
     words = spark.read.parquet(state)
     agg = words.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_words"),
@@ -1513,27 +1449,14 @@ def streaming_sketch_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
     Scale shape (100 TB): state is |types|·~27 cells forever; per-batch
     work is one map-side-combined bucket count; readout never touches
     the raw log."""
-    root = _cache_dir(sf_dir, "stream_hdr")
-    landing = os.path.join(root, "landing")
-    state = os.path.join(root, "state")
-    if not fsutil.exists(spark, os.path.join(landing, "_SUCCESS")):
-        fsutil.rmtree(spark, root)
-        ev = load(spark, sf_dir, "events").select("event_type", "value")
-        ev.repartition(8).write.mode("overwrite").parquet(landing)
-    ingest.reset_state(spark, state)
     schema = T.StructType(
         [
             T.StructField("event_type", T.StringType()),
             T.StructField("value", T.DoubleType()),
         ]
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 3)
-        .parquet(landing)
-    )
-    q = ingest.hdr_merge_stream(stream, state, "value", ["event_type"])
-    q.awaitTermination(300)
+    stream, state = _events_stream(spark, sf_dir, "stream_hdr", schema)
+    ingest.hdr_merge_stream(stream, state, "value", ["event_type"])
     from pyspark.sql import Window
 
     hist = spark.read.parquet(state)
@@ -1676,8 +1599,7 @@ def streaming_embedding_cell_assign(spark: SparkSession, sf_dir: str) -> DataFra
         .option("maxFilesPerTrigger", 3)
         .parquet(landing)
     )
-    q = ingest.ivf_assign_stream(stream, state, cents, "vec_id", "embedding", 64)
-    q.awaitTermination(300)
+    ingest.ivf_assign_stream(stream, state, cents, "vec_id", "embedding", 64)
 
     grid = spark.read.parquet(state)
     # both sides are 0-based posexplode positions; the oracle's 1-based
@@ -1821,10 +1743,9 @@ def streaming_cdc_tombstone_state(spark: SparkSession, sf_dir: str) -> DataFrame
         .option("maxFilesPerTrigger", 3)
         .parquet(landing)
     )
-    q = ingest.upsert_latest_state(
+    ingest.upsert_latest_state(
         stream, state, keys=["user_id"], order_cols=["ts", "eid"]
     )
-    q.awaitTermination(300)
     st = spark.read.parquet(state)
     return st.select(
         "user_id",
@@ -1908,14 +1829,11 @@ def streaming_pit_features_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(schema).parquet(landing)
     out = stateful.pit_features_stateful(stream)
     name = "pit_features_" + os.path.basename(os.path.dirname(root))
-    q = (
+    ingest.run_available_now(
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
     return spark.table(name).select(
         "event_id", "key", "label_ts", "label",
         "clicks_7d", "last_view_value", "n_events_before",

@@ -568,7 +568,7 @@ def test_time_travel_read_prunes_newer_versions(spark, sf):
     assert v1.select("version").distinct().count() == 2
 
 
-def test_every_registry_plan_matches_committed_ledger(spark, sf):
+def test_every_registry_plan_matches_committed_ledger(registry_failures):
     """Full-registry plan pinning (r11, VERDICT item 1): re-derive the
     physical-plan fingerprint (shuffles, broadcasts, join kinds, pushed
     scans, python nodes) of EVERY registered query live and diff it
@@ -578,39 +578,28 @@ def test_every_registry_plan_matches_committed_ledger(spark, sf):
     instead of surfacing (or not) via bench. Regenerate the ledger with
     `python tools/plan_report.py` after an INTENTIONAL plan change.
     plan_ms is a measurement column, not a pinned shape, and is ignored.
+    The live fingerprints come from the shared registry build
+    (conftest.py `registry_failures`); a query that fails to build or
+    plan is an ERROR row.
     """
     import os
-    import sys
 
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
-        if "__file__" in globals()
-        else "tools",
-    )
-    import importlib
-
-    plan_report = importlib.import_module("plan_report")
-
-    from etl_aws_spark.registry import all_queries
+    from tools.plan_report import parse_ledger
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    ledger = plan_report.parse_ledger(os.path.join(repo, "PLANS.md"))
-    queries = all_queries()
-    assert set(ledger) == set(queries), (
+    ledger = parse_ledger(os.path.join(repo, "PLANS.md"))
+    live = registry_failures[2]
+    assert set(ledger) == set(live), (
         "ledger/registry drift: "
-        f"only-ledger={sorted(set(ledger) - set(queries))[:5]} "
-        f"only-registry={sorted(set(queries) - set(ledger))[:5]} — "
+        f"only-ledger={sorted(set(ledger) - set(live))[:5]} "
+        f"only-registry={sorted(set(live) - set(ledger))[:5]} — "
         "rerun tools/plan_report.py"
     )
-    deltas = {}
-    for name, fn in sorted(queries.items()):
-        try:
-            fp, _ = plan_report.query_fingerprint(fn, spark, sf)
-        except Exception as e:  # a query erroring at plan time is a delta
-            fp = ("-", "-", f"ERROR {str(e)[:40]}", "-", "-")
-        if fp != ledger[name]:
-            deltas[name] = {"ledger": ledger[name], "live": fp}
+    deltas = {
+        name: {"ledger": ledger[name], "live": fp}
+        for name, fp in sorted(live.items())
+        if fp != ledger[name]
+    }
     assert not deltas, (
         f"{len(deltas)} plan(s) drifted from PLANS.md: {deltas}"
     )

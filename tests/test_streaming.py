@@ -50,14 +50,13 @@ def test_stream_dedup_and_merge(spark, dirs):
     stream = ingest.read_stream(spark, dirs["landing"], SCHEMA)
     assert stream.isStreaming
     deduped = ingest.dedup_with_watermark(stream, "ts", ["event_id"])
-    q = ingest.merge_into_refined(
+    ingest.merge_into_refined(
         deduped,
         dirs["refined"],
         partition_cols=["dia"],
         transform=lambda df: df.withColumn("dia", F.dayofmonth("ts")),
         checkpoint=dirs["ckpt"],
     )
-    q.awaitTermination(120)
 
     out = spark.read.parquet(dirs["refined"])
     assert out.count() == 3  # duplicate dropped
@@ -69,14 +68,13 @@ def test_stream_dedup_and_merge(spark, dirs):
 
     _land(spark, dirs["landing"], [(4, datetime.datetime(2024, 1, 3, 8), 9, 4.0)])
     stream2 = ingest.read_stream(spark, dirs["landing"], SCHEMA)
-    q2 = ingest.merge_into_refined(
+    ingest.merge_into_refined(
         ingest.dedup_with_watermark(stream2, "ts", ["event_id"]),
         dirs["refined"],
         partition_cols=["dia"],
         transform=lambda df: df.withColumn("dia", F.dayofmonth("ts")),
         checkpoint=dirs["ckpt"],
     )
-    q2.awaitTermination(120)
     out2 = spark.read.parquet(dirs["refined"])
     assert out2.count() == 4
     assert out2.filter(F.col("dia") == 1).count() == 2  # day-1 rows survived
@@ -98,14 +96,11 @@ def test_windowed_counts_schema(spark, dirs):
     )
     stream = ingest.read_stream(spark, dirs["landing"], SCHEMA)
     agg = ingest.windowed_counts(stream, "ts", "user_id")
-    q = (
+    ingest.run_available_now(
         agg.writeStream.format("memory")
         .queryName("win_counts")
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
     got = {
         (r.window_start.day, r.user_id): (r.n, r.sum_value)
         for r in spark.sql("SELECT * FROM win_counts").collect()
@@ -132,7 +127,7 @@ def test_watermark_late_data_replay(spark, dirs):
 
     def run():
         stream = ingest.read_stream(spark, dirs["landing"], SCHEMA)
-        q = ingest.merge_into_refined(
+        ingest.merge_into_refined(
             ingest.dedup_with_watermark(stream, "ts", ["event_id", "ts"], late="1 hour"),
             dirs["refined"],
             partition_cols=["dia"],
@@ -140,7 +135,6 @@ def test_watermark_late_data_replay(spark, dirs):
             checkpoint=dirs["ckpt"],
             mode="append",  # late rows land in already-written partitions
         )
-        q.awaitTermination(120)
 
     land([(1, "2024-01-01 10:00:00", 7, 1.0), (2, "2024-01-01 12:00:00", 7, 2.0)])
     run()  # watermark after this run: 11:00
@@ -176,15 +170,12 @@ def test_dedup_within_watermark_restamped_duplicates(spark, dirs):
         ],
     )
     stream = ingest.read_stream(spark, dirs["landing"], SCHEMA)
-    q = (
+    ingest.run_available_now(
         ingest.dedup_within_watermark(stream, "ts", ["event_id"], late="1 hour")
         .writeStream.format("memory")
         .queryName("wm_dedup")
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
     got = sorted(r.event_id for r in spark.sql("SELECT * FROM wm_dedup").collect())
     assert got == [1, 2]
 
@@ -206,11 +197,10 @@ def test_session_window_boundary_semantics(spark, dirs):
     _land(spark, dirs["landing"], rows)
     stream = ingest.read_stream(spark, dirs["landing"], SCHEMA)
     agg = ingest.session_window_stats(stream, "ts", "user_id", gap="1 hour")
-    q = (
+    ingest.run_available_now(
         agg.writeStream.format("memory").queryName("swtest")
-        .outputMode("complete").trigger(availableNow=True).start()
+        .outputMode("complete")
     )
-    q.awaitTermination(120)
     got = {
         (r.session_start, r.n_events): r.sum_value
         for r in spark.table("swtest").collect()
@@ -245,11 +235,10 @@ def test_stream_stream_join_time_bounds(spark, dirs):
         F.col("user_id").alias("k"),
     )
     j = ingest.stream_stream_time_join(clicks, buys, "k", "ts", "bts", within="1 hour")
-    q = (
+    ingest.run_available_now(
         j.select("click_id", "buy_id").writeStream.format("memory")
-        .queryName("ssj_test").outputMode("append").trigger(availableNow=True).start()
+        .queryName("ssj_test").outputMode("append")
     )
-    q.awaitTermination(120)
     got = {(r.click_id, r.buy_id) for r in spark.table("ssj_test").collect()}
     assert got == {(1, 2)}
 
@@ -278,16 +267,13 @@ def test_stream_stream_join_checkpoint_restart(spark, dirs):
             F.col("user_id").alias("k"),
         )
         j = ingest.stream_stream_time_join(clicks, buys, "k", "ts", "bts", within="1 hour")
-        q = (
+        ingest.run_available_now(
             j.select("click_id", "buy_id")
             .writeStream.format("parquet")
             .option("path", out_path)
             .option("checkpointLocation", dirs["ckpt"])
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(120)
 
     # run 1: click c1 + purchase p10 within the hour -> (1, 10)
     _land(spark, dirs["landing"], [
@@ -329,11 +315,10 @@ def test_upsert_latest_state_two_runs_and_batch_split(spark, dirs):
         if max_files:
             reader = reader.option("maxFilesPerTrigger", str(max_files))
         stream = reader.parquet(dirs["landing"])
-        q = ingest.upsert_latest_state(
+        ingest.upsert_latest_state(
             stream, state, keys=["user_id"], order_cols=["ts", "event_id"],
             checkpoint=dirs["ckpt"],
         )
-        q.awaitTermination(120)
 
     _land(spark, dirs["landing"], [
         (1, t0, 7, 10.0),

@@ -19,19 +19,16 @@ SCHEMA = T.StructType(
 
 
 def _run_stream(spark, landing, ckpt, out_dir):
-    from etl_aws_spark.streaming import stateful
+    from etl_aws_spark.streaming import ingest, stateful
 
     stream = spark.readStream.schema(SCHEMA).parquet(landing)
     ewma = stateful.ewma_stateful(stream, "k", "ts", "x", span=12)
-    q = (
+    ingest.run_available_now(
         ewma.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(180)
 
 
 def test_stateful_ewma_matches_batch_fold(spark, tmp_path):
@@ -77,21 +74,61 @@ def test_stateful_ewma_matches_batch_fold(spark, tmp_path):
         assert got2[datetime.datetime(2024, 1, 1, 10, i)] == pytest.approx(acc, rel=1e-12)
 
 
-def test_cms_stream_grid_is_batch_split_invariant(spark, tmp_path):
-    import os
+# sketch sink -> (run it over a stream into a state path, state sort keys)
+_SKETCH_SINKS = {
+    "cms": (
+        lambda ingest, stream, state: ingest.cms_merge_stream(
+            stream, state, "user_id", depth=4, width=16
+        ),
+        ["depth", "bucket"],
+    ),
+    "hll": (
+        lambda ingest, stream, state: ingest.hll_merge_stream(
+            stream, state, "user_id", ["grp"], p=6
+        ),
+        ["grp", "j"],
+    ),
+    "bloom": (
+        lambda ingest, stream, state: ingest.bloom_merge_stream(
+            stream, state, "user_id", ["grp"], m_bits=256, n_hashes=2
+        ),
+        ["grp", "word_idx"],
+    ),
+    "hdr": (
+        lambda ingest, stream, state: ingest.hdr_merge_stream(
+            stream, state, "value", ["grp"]
+        ),
+        ["grp", "bucket"],
+    ),
+}
 
+
+@pytest.mark.parametrize("sketch", sorted(_SKETCH_SINKS))
+def test_sketch_stream_state_is_batch_split_invariant(spark, tmp_path, sketch):
+    """Every sketch merge (cell-wise sum, register max, bit_or) is
+    associative, so 5 micro-batches of 2 files and 1 micro-batch of all 9
+    must commit the same state."""
     from pyspark.sql import functions as F, types as T
 
     from etl_aws_spark.streaming import ingest
 
+    run, order = _SKETCH_SINKS[sketch]
     landing = str(tmp_path / "landing")
     spark.range(0, 900).select(
-        F.col("id").alias("event_id"), (F.col("id") % 37).alias("user_id")
+        F.col("id").alias("event_id"),
+        (F.col("id") % 3).cast("string").alias("grp"),
+        (F.col("id") % 37).alias("user_id"),
+        ((F.col("id") % 50) * 1.37 + 0.01).alias("value"),
     ).repartition(9).write.mode("overwrite").parquet(landing)
     schema = T.StructType(
-        [T.StructField("event_id", T.LongType()), T.StructField("user_id", T.LongType())]
+        [
+            T.StructField("event_id", T.LongType()),
+            T.StructField("grp", T.StringType()),
+            T.StructField("user_id", T.LongType()),
+            T.StructField("value", T.DoubleType()),
+        ]
     )
-    grids = []
+    states = []
     for files_per_trigger in (2, 9):
         state = str(tmp_path / f"state_{files_per_trigger}")
         stream = (
@@ -99,26 +136,21 @@ def test_cms_stream_grid_is_batch_split_invariant(spark, tmp_path):
             .option("maxFilesPerTrigger", files_per_trigger)
             .parquet(landing)
         )
-        q = ingest.cms_merge_stream(stream, state, "user_id", depth=4, width=16)
-        q.awaitTermination(120)
-        pdf = (
-            spark.read.parquet(state)
-            .toPandas()
-            .sort_values(["depth", "bucket"])
-            .reset_index(drop=True)
+        run(ingest, stream, state)
+        states.append(
+            spark.read.parquet(state).toPandas().sort_values(order).reset_index(drop=True)
         )
-        grids.append(pdf)
-    # cell-wise addition is associative: any micro-batch split converges
-    # to the same grid
-    assert grids[0].equals(grids[1])
-    assert grids[0].cell_n.sum() == 900 * 4
+    assert len(states[0]) > 1
+    assert states[0].equals(states[1])
+    if sketch == "cms":
+        assert states[0].cell_n.sum() == 900 * 4
 
 
 def test_cms_state_commit_is_replay_idempotent_and_atomic(spark, tmp_path):
     """foreachBatch is at-least-once: replaying already-merged batch_ids
     (here: wiping the checkpoint and re-running the identical stream) must
-    NOT double-add the grid, and the state must be a symlink-flipped
-    version dir so a crash mid-commit can never truncate it."""
+    NOT double-add the grid, and the state must be a version dir
+    published by rename so a crash mid-commit can never truncate it."""
     import os
     import shutil
 
@@ -142,10 +174,9 @@ def test_cms_state_commit_is_replay_idempotent_and_atomic(spark, tmp_path):
             .option("maxFilesPerTrigger", 2)
             .parquet(landing)
         )
-        q = ingest.cms_merge_stream(
+        ingest.cms_merge_stream(
             stream, state, "user_id", depth=4, width=16, checkpoint=ckpt
         )
-        q.awaitTermination(120)
 
     run()
     grid1 = (
@@ -173,6 +204,29 @@ def test_cms_state_commit_is_replay_idempotent_and_atomic(spark, tmp_path):
     assert not os.path.lexists(state)
     assert not os.path.exists(state + ".versions")
     assert not os.path.exists(state + ".commits")
+
+
+def test_available_now_timeout_stops_the_query_and_raises(spark, tmp_path, monkeypatch):
+    """A run still going after RUN_TIMEOUT_S must fail instead of letting
+    its caller read a half-written sink, and must not leave the query
+    running behind the error."""
+    import time
+
+    from etl_aws_spark.streaming import ingest
+
+    landing = str(tmp_path / "landing")
+    spark.range(0, 10).write.parquet(landing)
+    monkeypatch.setattr(ingest, "RUN_TIMEOUT_S", 1)
+
+    def slow_sink(batch_df, batch_id):
+        time.sleep(3)
+
+    writer = (
+        spark.readStream.schema("id long").parquet(landing).writeStream.foreachBatch(slow_sink)
+    )
+    with pytest.raises(TimeoutError):
+        ingest.run_available_now(writer)
+    assert spark.streams.active == []
 
 
 def test_transform_with_state_topk_carries_across_batches(spark, tmp_path):
@@ -256,8 +310,7 @@ def test_kmv_stream_equals_batch_sketch_at_any_split(spark, tmp_path):
             .option("maxFilesPerTrigger", files_per_trigger)
             .parquet(landing)
         )
-        q = ingest.kmv_merge_stream(stream, state, "key", ["grp"], k=32)
-        q.awaitTermination(120)
+        ingest.kmv_merge_stream(stream, state, "key", ["grp"], k=32)
         streamed = spark.read.parquet(state).select("grp", "h")
         # bottom-k merge is associative + idempotent: the streamed sketch
         # must equal the one-shot batch sketch hash-for-hash
@@ -302,8 +355,7 @@ def test_ivf_assign_stream_is_batch_split_invariant(spark, tmp_path):
             .option("maxFilesPerTrigger", files_per_trigger)
             .parquet(landing)
         )
-        q = ingest.ivf_assign_stream(stream, state, cents, "vec_id", "embedding", dim)
-        q.awaitTermination(120)
+        ingest.ivf_assign_stream(stream, state, cents, "vec_id", "embedding", dim)
         pdf = (
             spark.read.parquet(state)
             .toPandas()
@@ -353,10 +405,9 @@ def test_ivf_assign_stream_replay_is_idempotent(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(landing)
         )
-        q = ingest.ivf_assign_stream(
+        ingest.ivf_assign_stream(
             stream, state, cents, "vec_id", "embedding", dim, checkpoint=ckpt
         )
-        q.awaitTermination(120)
 
     run()
     g1 = (spark.read.parquet(state).toPandas()
@@ -381,7 +432,7 @@ def test_pit_features_state_carries_across_time_ordered_batches(spark, tmp_path)
     from pyspark.sql import functions as F
 
     from etl_aws_spark.sources.readers import read_table
-    from etl_aws_spark.streaming import stateful
+    from etl_aws_spark.streaming import ingest, stateful
 
     sf = "/root/testdata/sf0.001"
     ev = read_table(spark, sf, "events").select(
@@ -410,16 +461,13 @@ def test_pit_features_state_carries_across_time_ordered_batches(spark, tmp_path)
             .parquet(landing + "/b=*")
         )
         out_dir = str(tmp_path / f"out{max_files}")
-        q = (
+        ingest.run_available_now(
             stateful.pit_features_stateful(stream)
             .writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", str(tmp_path / f"ck{max_files}"))
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(180)
         return (
             spark.read.parquet(out_dir)
             .toPandas()
@@ -485,16 +533,13 @@ def test_stream_stream_join_restart_under_backlog(spark, tmp_path):
             clicks, purchases, key="key_u", left_ts="ts", right_ts="pts",
             within="1 hour",
         )
-        q = (
+        ingest.run_available_now(
             joined.select("click_id", "purchase_id")
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(180)
 
     eid = 0
     t1 = []
