@@ -1,14 +1,19 @@
 """Binary-column operators: metadata, decode, feature extraction, resize,
-frame sampling."""
+frame sampling. Every per-asset op is a per-asset function plus one
+:func:`map_rows` pass."""
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import math
+import struct
+import zlib
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 MEDIA_SCHEMA = (
     "asset_id bigint, payload binary, mime string, n_bytes bigint, digest string"
@@ -20,6 +25,25 @@ FEATURE_SCHEMA = (
 )
 
 FRAME_SCHEMA = "asset_id bigint, frame_idx int, frame_digest string"
+
+
+def map_rows(df: DataFrame, cols: list, fn, schema: str) -> DataFrame:
+    """One Arrow-batched ``mapInPandas`` pass over ``df``: ``fn(*values)``
+    receives each input row's ``cols`` values and returns that row's
+    output tuples in ``schema`` order — none, one, or one per frame or
+    bin. Output column names and types are read from the DDL ``schema``
+    alone. Batch size is governed by
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``, so executor memory is
+    bounded by batch_size × max_asset_size."""
+    out = DataType.fromDDL(schema)
+    names = out.fieldNames()
+
+    def run(batches):
+        for pdf in batches:
+            rows = [t for vals in zip(*(pdf[c] for c in cols)) for t in fn(*vals)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, out)
 
 
 def attach_media_metadata(df: DataFrame, id_col: str, payload_col: str, mime: str) -> DataFrame:
@@ -35,15 +59,23 @@ def attach_media_metadata(df: DataFrame, id_col: str, payload_col: str, mime: st
     )
 
 
+def fixture_pixels(doc_id: int):
+    """The deterministic (H, W, 3) uint8 RGB image of ``doc_id`` behind the
+    BMP/PNG corpora and the binaryFile fixture: W = 4 + id % 13,
+    H = 4 + 7·id % 11, v(x, y, c) = (31·id + 7x + 3y + 11c) % 256 — the
+    closed form the SQL oracles recompute."""
+    w, h = 4 + doc_id % 13, 4 + (doc_id * 7) % 11
+    x = np.arange(w)[None, :, None]
+    y = np.arange(h)[:, None, None]
+    c = np.arange(3)[None, None, :]
+    return ((doc_id * 31 + x * 7 + y * 3 + c * 11) % 256).astype(np.uint8)
+
+
 def encode_bmp24(arr) -> bytes:
     """Encode an (H, W, 3) uint8 RGB array as an uncompressed 24-bpp BMP
     (BITMAPINFOHEADER, BI_RGB, bottom-up, 4-byte row padding) — pure
     numpy/struct, no imaging library. Used to synthesize a real decodable
     corpus in tests and queries."""
-    import struct
-
-    import numpy as np
-
     arr = np.asarray(arr, dtype=np.uint8)
     h, w, _ = arr.shape
     row = w * 3
@@ -66,10 +98,6 @@ def decode_bmp24(payload: bytes):
     fall back; validation checks magic, header size, bpp, compression, and
     that the buffer really contains stride x height bytes (a text payload
     that happens to start with 'BM' cannot pass)."""
-    import struct
-
-    import numpy as np
-
     if len(payload) < 54 or payload[:2] != b"BM":
         raise ValueError("not a BMP")
     off = struct.unpack_from("<I", payload, 10)[0]
@@ -93,13 +121,22 @@ def decode_bmp24(payload: bytes):
     return img
 
 
+def dhash_bands(arr) -> list[int]:
+    """dHash of an (H, W, 3) image as four 16-bit bands: the green channel
+    nearest-neighbor sampled on a 9×8 grid (integer index arithmetic —
+    exactly replayable in SQL), bit k = gy·8 + gx set iff the sample is
+    brighter than its right neighbor, band b = bits 16b .. 16b+15."""
+    h, w = arr.shape[0], arr.shape[1]
+    g = arr[:, :, 1].astype(np.int64)  # green channel
+    grid = g[np.ix_((np.arange(8) * h) // 8, (np.arange(9) * w) // 9)]
+    bits = (grid[:, :8] > grid[:, 1:]).astype(np.int64).reshape(-1)
+    return [int((bits[b * 16 : (b + 1) * 16] << np.arange(16)).sum()) for b in range(4)]
+
+
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(data))
         + ctype
@@ -114,11 +151,6 @@ def encode_png_rgb8(arr, row_filters=None) -> bytes:
     optionally assigns a PNG filter type (0-4, cycled) per scanline so a
     decoder's None/Sub/Up/Average/Paeth reconstruction paths can all be
     exercised from one corpus; default is filter 0 everywhere."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     arr = np.asarray(arr, dtype=np.uint8)
     h, w, _ = arr.shape
     bpp = 3
@@ -165,11 +197,6 @@ def decode_png_rgb8(payload: bytes):
     (None/Sub/Up/Average/Paeth), no imaging library. CRCs are verified;
     raises ValueError on any other PNG flavor (palette, alpha, 16-bit,
     interlaced) so callers can fall back."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     if len(payload) < 8 + 25 or payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG")
     pos, w = 8, None
@@ -255,8 +282,6 @@ def extract_features(df: DataFrame) -> DataFrame:
 
         def pil_decode(payload: bytes):
             with Image.open(io.BytesIO(payload)) as im:
-                import numpy as np
-
                 arr = np.asarray(im.convert("RGB"), dtype="float64")
                 return im.width, im.height, 3, float(arr.mean() / 255.0)
 
@@ -301,22 +326,10 @@ def extract_features(df: DataFrame) -> DataFrame:
                 pass
         return _decode_stub(payload)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"].values,
-                    "mime": pdf["mime"].values,
-                    "n_bytes": pdf["n_bytes"].values,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_channels": [f[2] for f in feats],
-                    "mean_intensity": [f[3] for f in feats],
-                }
-            )
+    def features(aid, mime, n_bytes, payload):
+        return [(aid, mime, n_bytes, *decode(bytes(payload)))]
 
-    return df.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_rows(df, ["asset_id", "mime", "n_bytes", "payload"], features, FEATURE_SCHEMA)
 
 
 def sample_frames(df: DataFrame, every_n_bytes: int = 64, max_frames: int = 8) -> DataFrame:
@@ -324,30 +337,21 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 64, max_frames: int = 8) -
     frame (UDTF shape — rows expand). The stub samples byte windows; a real
     av/ffmpeg decoder plugs into the same mapInPandas loop."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, digs = [], [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                data = bytes(payload)
-                n = min(max_frames, max(1, len(data) // every_n_bytes))
-                for i in range(n):
-                    chunk = data[i * every_n_bytes : (i + 1) * every_n_bytes]
-                    ids.append(aid)
-                    idxs.append(i)
-                    digs.append(hashlib.md5(chunk).hexdigest())
-            yield pd.DataFrame({"asset_id": ids, "frame_idx": idxs, "frame_digest": digs})
+    def frames(aid, payload):
+        data = bytes(payload)
+        n = min(max_frames, max(1, len(data) // every_n_bytes))
+        return [
+            (aid, i, hashlib.md5(data[i * every_n_bytes : (i + 1) * every_n_bytes]).hexdigest())
+            for i in range(n)
+        ]
 
-    return df.mapInPandas(run, schema=FRAME_SCHEMA)
+    return map_rows(df, ["asset_id", "payload"], frames, FRAME_SCHEMA)
 
 
 def encode_wav16(samples, sample_rate: int = 8000) -> bytes:
     """Encode a 1-D int16 array as a canonical 44-byte-header RIFF/WAVE
     file (PCM, mono, 16-bit LE) — pure struct/numpy, no audio library.
     Used to synthesize a real decodable audio corpus in tests/queries."""
-    import struct
-
-    import numpy as np
-
     s = np.asarray(samples, dtype="<i2")
     data = s.tobytes()
     fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
@@ -365,10 +369,6 @@ def decode_wav16(payload: bytes):
     dependency-free, walking the RIFF chunk list properly (a conforming
     writer may insert LIST/fact chunks before data). Raises ValueError on
     anything that is not strictly this format so callers can fall back."""
-    import struct
-
-    import numpy as np
-
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos, fmt, data = 12, None, None
@@ -401,42 +401,21 @@ def extract_audio_features(df: DataFrame) -> DataFrame:
     duration_ms, rms, peak, n_zero_crossings.
     """
 
-    def run(batches):
-        import numpy as np
-        import pandas as pd
+    def features(aid, payload):
+        s, rate = decode_wav16(bytes(payload))
+        x = s.astype(np.float64)
+        n = len(s)
+        neg = x < 0
+        zc = int(np.count_nonzero(neg[1:] != neg[:-1])) if n > 1 else 0
+        # no rounding here: Python's round is half-to-even while the
+        # engine convention is Spark's HALF_UP — callers round via
+        # F.round so both engines apply one identical rounding
+        rms = float(np.sqrt(np.mean(x * x))) if n else 0.0
+        peak = int(np.abs(s).max()) if n else 0
+        return [(aid, n, int(rate), n * 1000.0 / rate, rms, peak, zc)]
 
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                s, rate = decode_wav16(bytes(payload))
-                x = s.astype(np.float64)
-                n = len(s)
-                neg = x < 0
-                zc = int(np.count_nonzero(neg[1:] != neg[:-1])) if n > 1 else 0
-                # no rounding here: Python's round is half-to-even while the
-                # engine convention is Spark's HALF_UP — callers round via
-                # F.round so both engines apply one identical rounding
-                rows.append(
-                    (
-                        int(aid),
-                        n,
-                        int(rate),
-                        n * 1000.0 / rate,
-                        float(np.sqrt(np.mean(x * x))) if n else 0.0,
-                        int(np.abs(s).max()) if n else 0,
-                        zc,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "n_samples", "sample_rate", "duration_ms",
-                    "rms", "peak", "n_zero_crossings",
-                ],
-            )
-
-    return df.mapInPandas(
-        run,
+    return map_rows(
+        df, ["asset_id", "payload"], features,
         "asset_id bigint, n_samples bigint, sample_rate bigint, duration_ms double, "
         "rms double, peak bigint, n_zero_crossings bigint",
     )
@@ -449,8 +428,6 @@ def encode_y4m_420(frames, fps: str = "25:1") -> bytes:
     ``YUV4MPEG2 W<w> H<h> F<fps> Ip A1:1 C420jpeg``, then per frame a
     ``FRAME`` line followed by raw Y (w·h), Cb and Cr (w/2·h/2) planes.
     ``frames`` is a list of (Y, Cb, Cr) uint8 arrays."""
-    import numpy as np
-
     y0, cb0, cr0 = frames[0]
     h, w = y0.shape
     out = [f"YUV4MPEG2 W{w} H{h} F{fps} Ip A1:1 C420jpeg\n".encode("ascii")]
@@ -467,8 +444,6 @@ def decode_y4m_420(payload: bytes):
     tags, then walk FRAME sections into (Y, Cb, Cr) uint8 planes.
     Returns (width, height, [(Y, Cb, Cr), ...]). Pure numpy/bytes — the
     real-decode video tier beside BMP/PNG/JPEG (images) and WAV (audio)."""
-    import numpy as np
-
     nl = payload.index(b"\n")
     header = payload[:nl].decode("ascii", "replace").split(" ")
     if header[0] != "YUV4MPEG2":
@@ -521,8 +496,6 @@ def bilinear_resize_numerators(arr, out_h: int, out_w: int):
     row/col; the clamped corner always carries weight 0 there, so the
     clamp never changes the value (it only keeps indices in range).
     """
-    import numpy as np
-
     h, w, c = arr.shape
     a = arr.astype(np.int64)
     jj = np.arange(out_w)
@@ -561,39 +534,16 @@ def resize_images(df: DataFrame, out_h: int, out_w: int) -> DataFrame:
     accounting. Output: asset_id, width, height, out_w, out_h,
     resize_numerator_sum (int64, denominator 4·out_h·out_w per pixel),
     mean_resized_intensity (normalized /255)."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def resize(aid, payload):
+        arr = decode_bmp24(bytes(payload))
+        n, den = bilinear_resize_numerators(arr, out_h, out_w)
+        s = int(n.sum())
+        npix = out_h * out_w * arr.shape[2]
+        return [(aid, arr.shape[1], arr.shape[0], out_w, out_h, s, s / (den * npix * 255.0))]
 
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                arr = decode_bmp24(bytes(payload))
-                n, den = bilinear_resize_numerators(arr, out_h, out_w)
-                s = int(n.sum())
-                npix = out_h * out_w * arr.shape[2]
-                rows.append(
-                    (
-                        int(aid),
-                        arr.shape[1],
-                        arr.shape[0],
-                        out_w,
-                        out_h,
-                        s,
-                        s / (den * npix * 255.0),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "out_w", "out_h",
-                    "resize_numerator_sum", "mean_resized_intensity",
-                ],
-            )
-
-    return df.mapInPandas(
-        run,
+    return map_rows(
+        df, ["asset_id", "payload"], resize,
         "asset_id bigint, width int, height int, out_w int, out_h int, "
         "resize_numerator_sum bigint, mean_resized_intensity double",
     )
@@ -607,8 +557,6 @@ def linear_resample_numerators(samples, out_n: int):
     is N / (2·out_n) with N exact int64 (negative samples included).
     Returns (N, den); the clamped right neighbor always carries weight 0
     at the boundary."""
-    import numpy as np
-
     n = len(samples)
     a = np.asarray(samples, dtype=np.int64)
     jj = np.arange(out_n)
@@ -630,28 +578,15 @@ def resample_audio(df: DataFrame, out_n: int) -> DataFrame:
     per-clip accounting. Output: asset_id, n_samples, out_n,
     resample_numerator_sum (int64, denominator 2·out_n per sample),
     mean_resampled (mean output amplitude)."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                samples, _rate = decode_wav16(bytes(payload))
-                n_num, den = linear_resample_numerators(samples, out_n)
-                s = int(n_num.sum())
-                rows.append(
-                    (int(aid), len(samples), out_n, s, s / (den * out_n))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "n_samples", "out_n",
-                    "resample_numerator_sum", "mean_resampled",
-                ],
-            )
+    def resample(aid, payload):
+        samples, _rate = decode_wav16(bytes(payload))
+        n_num, den = linear_resample_numerators(samples, out_n)
+        s = int(n_num.sum())
+        return [(aid, len(samples), out_n, s, s / (den * out_n))]
 
-    return df.mapInPandas(
-        run,
+    return map_rows(
+        df, ["asset_id", "payload"], resample,
         "asset_id bigint, n_samples int, out_n int, "
         "resample_numerator_sum bigint, mean_resampled double",
     )
@@ -671,54 +606,30 @@ def equalize_images(df: DataFrame) -> DataFrame:
     Output: asset_id, width, height, n_values (distinct pixel values
     before), cdf_min, equalized_sum (Σ count(v)·h(v), exact int64),
     mean_equalized (normalized /255)."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
+    def equalize(aid, payload):
+        arr = decode_bmp24(bytes(payload))
+        flat = arr.reshape(-1).astype(np.int64)
+        n = flat.size
+        hist = np.bincount(flat, minlength=256)
+        cdf = np.cumsum(hist)
+        present = np.nonzero(hist)[0]
+        cdf_min = int(cdf[present[0]])
+        total = 0
+        for v in present:
+            cf = int(cdf[v])
+            if n == cdf_min:
+                hv = 0
+            else:
+                hv = math.floor((cf - cdf_min) * 255.0 / (n - cdf_min) + 0.5)
+            total += int(hist[v]) * hv
+        return [
+            (aid, arr.shape[1], arr.shape[0], int(len(present)), cdf_min, total,
+             total / (n * 255.0))
+        ]
 
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                arr = decode_bmp24(bytes(payload))
-                flat = arr.reshape(-1).astype(np.int64)
-                n = flat.size
-                hist = np.bincount(flat, minlength=256)
-                cdf = np.cumsum(hist)
-                present = np.nonzero(hist)[0]
-                cdf_min = int(cdf[present[0]])
-                total = 0
-                for v in present:
-                    cf = int(cdf[v])
-                    if n == cdf_min:
-                        hv = 0
-                    else:
-                        hv = math.floor(
-                            (cf - cdf_min) * 255.0 / (n - cdf_min) + 0.5
-                        )
-                    total += int(hist[v]) * hv
-                rows.append(
-                    (
-                        int(aid),
-                        arr.shape[1],
-                        arr.shape[0],
-                        int(len(present)),
-                        cdf_min,
-                        total,
-                        total / (n * 255.0),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "n_values",
-                    "cdf_min", "equalized_sum", "mean_equalized",
-                ],
-            )
-
-    return df.mapInPandas(
-        run,
+    return map_rows(
+        df, ["asset_id", "payload"], equalize,
         "asset_id bigint, width int, height int, n_values int, "
         "cdf_min bigint, equalized_sum bigint, mean_equalized double",
     )
@@ -737,44 +648,28 @@ def audio_vad_energy(df: DataFrame, frame: int = 32, threshold: int = 45_000_000
 
     Output: asset_id, n_samples, n_frames, n_active, longest_run,
     total_energy, active_ratio."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def vad(aid, payload):
+        samples, _rate = decode_wav16(bytes(payload))
+        a = np.asarray(samples, dtype=np.int64)
+        n = a.size
+        k = n // frame
+        if k == 0:
+            return [(aid, n, 0, 0, 0, 0, 0.0)]
+        fr = a[: k * frame].reshape(k, frame)
+        en = (fr * fr).sum(axis=1)
+        act = en >= threshold
+        longest = cur = 0
+        for flag in act:
+            cur = cur + 1 if flag else 0
+            longest = max(longest, cur)
+        return [
+            (aid, n, k, int(act.sum()), int(longest), int(en.sum()),
+             float(act.sum()) / k)
+        ]
 
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                samples, _rate = decode_wav16(bytes(payload))
-                a = np.asarray(samples, dtype=np.int64)
-                n = a.size
-                k = n // frame
-                if k == 0:
-                    rows.append((int(aid), n, 0, 0, 0, 0, 0.0))
-                    continue
-                fr = a[: k * frame].reshape(k, frame)
-                en = (fr * fr).sum(axis=1)
-                act = en >= threshold
-                longest = cur = 0
-                for flag in act:
-                    cur = cur + 1 if flag else 0
-                    longest = max(longest, cur)
-                rows.append(
-                    (
-                        int(aid), n, k, int(act.sum()), int(longest),
-                        int(en.sum()), float(act.sum()) / k,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "n_samples", "n_frames", "n_active",
-                    "longest_run", "total_energy", "active_ratio",
-                ],
-            )
-
-    return df.mapInPandas(
-        run,
+    return map_rows(
+        df, ["asset_id", "payload"], vad,
         "asset_id bigint, n_samples int, n_frames int, n_active int, "
         "longest_run int, total_energy bigint, active_ratio double",
     )
@@ -787,10 +682,6 @@ def _dct_basis_fixed(n: int, n_freq: int):
     identically on both engines (far above libm's last-ulp jitter, far
     below the 1e-4 resolution), so the basis integers — and therefore
     every DCT coefficient — are engine-exact."""
-    import math
-
-    import numpy as np
-
     out = np.zeros((n_freq, n), dtype=np.int64)
     for u in range(n_freq):
         for x in range(n):
@@ -814,57 +705,28 @@ def phash_images(df: DataFrame, n_freq: int = 4) -> DataFrame:
 
     Output: asset_id, width, height, mean_luma (Σluma/(w*h*255000)),
     dc_sum (Σluma, exact), phash (15-bit int)."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def phash(aid, payload):
+        arr = decode_bmp24(bytes(payload)).astype(np.int64)
+        h, w = arr.shape[0], arr.shape[1]
+        luma = 299 * arr[:, :, 0] + 587 * arr[:, :, 1] + 114 * arr[:, :, 2]
+        cbh = _dct_basis_fixed(h, n_freq)  # (n_freq, h)
+        cbw = _dct_basis_fixed(w, n_freq)  # (n_freq, w)
+        # F[u, v] = sum_y sum_x luma[y, x] * cbh[u, y] * cbw[v, x]
+        coeff = cbh @ luma @ cbw.T
+        ac = [
+            int(coeff[u, v])
+            for u in range(n_freq)
+            for v in range(n_freq)
+            if not (u == 0 and v == 0)
+        ]
+        med = sorted(ac)[len(ac) // 2]
+        code = sum(1 << i for i, cval in enumerate(ac) if cval > med)
+        dc = int(luma.sum())
+        return [(aid, w, h, dc, round(dc / (w * h * 255000.0) + 1e-9, 6) + 0.0, code)]
 
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                arr = decode_bmp24(bytes(payload)).astype(np.int64)
-                h, w = arr.shape[0], arr.shape[1]
-                luma = 299 * arr[:, :, 0] + 587 * arr[:, :, 1] + 114 * arr[:, :, 2]
-                cbh = _dct_basis_fixed(h, n_freq)  # (n_freq, h)
-                cbw = _dct_basis_fixed(w, n_freq)  # (n_freq, w)
-                # F[u, v] = sum_y sum_x luma[y, x] * cbh[u, y] * cbw[v, x]
-                coeff = cbh @ luma @ cbw.T
-                ac = [
-                    int(coeff[u, v])
-                    for u in range(n_freq)
-                    for v in range(n_freq)
-                    if not (u == 0 and v == 0)
-                ]
-                med = sorted(ac)[len(ac) // 2]
-                phash = 0
-                for i, cval in enumerate(ac):
-                    if cval > med:
-                        phash |= 1 << i
-                dc = int(luma.sum())
-                rows.append(
-                    (
-                        int(aid),
-                        w,
-                        h,
-                        dc,
-                        round(dc / (w * h * 255000.0) + 1e-9, 6) + 0.0,
-                        phash,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id",
-                    "width",
-                    "height",
-                    "dc_sum",
-                    "mean_luma",
-                    "phash",
-                ],
-            )
-
-    return df.mapInPandas(
-        run,
+    return map_rows(
+        df, ["asset_id", "payload"], phash,
         "asset_id bigint, width int, height int, dc_sum bigint, "
         "mean_luma double, phash bigint",
     )
@@ -888,38 +750,25 @@ def audio_spectral_projection(
 
     Output: long-form (asset_id, n_samples, k, a, b) — one row per
     (clip, bin); no per-sample rows ever leave the task."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def project(aid, payload):
+        samples, _rate = decode_wav16(bytes(payload))
+        s = np.asarray(samples, dtype=np.int64)
+        n = s.size
+        j = np.arange(n)
+        rows = []
+        for k in bins:
+            theta = _SPECTRAL_TWO_PI * k * j / n
+            c = np.cos(theta)
+            sn = np.sin(theta)
+            cb = np.round(c * 10000.0 + np.sign(c) * 0.001).astype(np.int64)
+            sb = np.round(sn * 10000.0 + np.sign(sn) * 0.001).astype(np.int64)
+            rows.append((aid, n, int(k), int((s * cb).sum()), int((s * sb).sum())))
+        return rows
 
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                samples, _rate = decode_wav16(bytes(payload))
-                s = np.asarray(samples, dtype=np.int64)
-                n = s.size
-                j = np.arange(n)
-                for k in bins:
-                    theta = _SPECTRAL_TWO_PI * k * j / n
-                    c = np.cos(theta)
-                    sn = np.sin(theta)
-                    cb = np.round(c * 10000.0 + np.sign(c) * 0.001).astype(
-                        np.int64
-                    )
-                    sb = np.round(sn * 10000.0 + np.sign(sn) * 0.001).astype(
-                        np.int64
-                    )
-                    rows.append(
-                        (int(aid), n, int(k), int((s * cb).sum()),
-                         int((s * sb).sum()))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "n_samples", "k", "a", "b"]
-            )
-
-    return df.mapInPandas(
-        run, "asset_id bigint, n_samples int, k int, a bigint, b bigint"
+    return map_rows(
+        df, ["asset_id", "payload"], project,
+        "asset_id bigint, n_samples int, k int, a bigint, b bigint",
     )
 
 
@@ -933,43 +782,24 @@ def image_sobel_stats(df: DataFrame, threshold: int = 150000) -> DataFrame:
     generator — no float enters until the final density ratio.
 
     Output: asset_id, width, height, n_interior, n_edges, total_grad."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def sobel(aid, payload):
+        a = decode_bmp24(bytes(payload)).astype(np.int64)  # h × w × 3
+        lum = 299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]
+        h, w = lum.shape
+        gx = (
+            lum[:-2, 2:] + 2 * lum[1:-1, 2:] + lum[2:, 2:]
+            - lum[:-2, :-2] - 2 * lum[1:-1, :-2] - lum[2:, :-2]
+        )
+        gy = (
+            lum[2:, :-2] + 2 * lum[2:, 1:-1] + lum[2:, 2:]
+            - lum[:-2, :-2] - 2 * lum[:-2, 1:-1] - lum[:-2, 2:]
+        )
+        mag = np.abs(gx) + np.abs(gy)
+        return [(aid, w, h, int(mag.size), int((mag >= threshold).sum()), int(mag.sum()))]
 
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                px = decode_bmp24(bytes(payload))  # h × w × 3 uint8
-                a = px.astype(np.int64)
-                lum = 299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]
-                h, w = lum.shape
-                gx = (
-                    lum[:-2, 2:] + 2 * lum[1:-1, 2:] + lum[2:, 2:]
-                    - lum[:-2, :-2] - 2 * lum[1:-1, :-2] - lum[2:, :-2]
-                )
-                gy = (
-                    lum[2:, :-2] + 2 * lum[2:, 1:-1] + lum[2:, 2:]
-                    - lum[:-2, :-2] - 2 * lum[:-2, 1:-1] - lum[:-2, 2:]
-                )
-                mag = np.abs(gx) + np.abs(gy)
-                rows.append(
-                    (
-                        int(aid), w, h, int(mag.size),
-                        int((mag >= threshold).sum()), int(mag.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "n_interior", "n_edges",
-                    "total_grad",
-                ],
-            )
-
-    return df.mapInPandas(
-        run,
+    return map_rows(
+        df, ["asset_id", "payload"], sobel,
         "asset_id bigint, width int, height int, n_interior bigint, "
         "n_edges bigint, total_grad bigint",
     )
@@ -988,49 +818,31 @@ def image_otsu_threshold(df: DataFrame) -> DataFrame:
     may scan occupied bins only. Emits the threshold, class populations.
 
     Output: asset_id, width, height, otsu_threshold, n_below, n_above."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def otsu(aid, payload):
+        a = decode_bmp24(bytes(payload)).astype(np.int64)
+        lum = (299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]) // 1000
+        hist = [int(c) for c in np.bincount(lum.ravel(), minlength=256)]
+        n = int(lum.size)
+        total_sum = sum(t * c for t, c in enumerate(hist))
+        best_t, best_score = 0, -1
+        w0 = s0 = 0
+        for t in range(256):
+            w0 += hist[t]
+            s0 += t * hist[t]
+            w1 = n - w0
+            if w0 == 0 or w1 == 0:
+                continue
+            # between-class variance ∝ (s0*w1 - (total-s0)*w0)² / (w0*w1)
+            d = s0 * w1 - (total_sum - s0) * w0
+            score = (d * d * 1000000) // (w0 * w1)
+            if score > best_score:
+                best_t, best_score = t, score
+        n_below = sum(hist[: best_t + 1])
+        return [(aid, lum.shape[1], lum.shape[0], best_t, n_below, n - n_below)]
 
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                px = decode_bmp24(bytes(payload))
-                a = px.astype(np.int64)
-                lum = (299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]) // 1000
-                hist = np.bincount(lum.ravel(), minlength=256).astype(object)
-                n = int(lum.size)
-                total_sum = int((np.arange(256, dtype=np.int64) * hist.astype(np.int64)).sum())
-                best_t, best_score = 0, -1
-                w0 = 0
-                s0 = 0
-                for t in range(256):
-                    w0 += int(hist[t])
-                    s0 += t * int(hist[t])
-                    w1 = n - w0
-                    if w0 == 0 or w1 == 0:
-                        continue
-                    # between-class variance ∝ (s0*w1 - (total-s0)*w0)² / (w0*w1)
-                    d = s0 * w1 - (total_sum - s0) * w0
-                    score = (d * d * 1000000) // (w0 * w1)
-                    if score > best_score:
-                        best_t, best_score = t, score
-                n_below = int(hist[: best_t + 1].astype(np.int64).sum())
-                rows.append(
-                    (int(aid), lum.shape[1], lum.shape[0], best_t,
-                     n_below, n - n_below)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "otsu_threshold",
-                    "n_below", "n_above",
-                ],
-            )
-
-    return df.mapInPandas(
-        run,
+    return map_rows(
+        df, ["asset_id", "payload"], otsu,
         "asset_id bigint, width int, height int, otsu_threshold int, "
         "n_below bigint, n_above bigint",
     )
@@ -1044,22 +856,12 @@ def audio_zero_crossing(df: DataFrame) -> DataFrame:
     the same decode pass as VAD and the spectral centroid.
 
     Output: asset_id, n_samples, n_crossings (exact int64s)."""
-    import pandas as pd
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def crossings(aid, payload):
+        s = np.asarray(decode_wav16(bytes(payload))[0], dtype=np.int64)
+        return [(aid, int(s.size), int(((s[:-1] >= 0) != (s[1:] >= 0)).sum()))]
 
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                samples, _rate = decode_wav16(bytes(payload))
-                s = np.asarray(samples, dtype=np.int64)
-                nz = int(((s[:-1] >= 0) != (s[1:] >= 0)).sum())
-                rows.append((int(aid), int(s.size), nz))
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "n_samples", "n_crossings"]
-            )
-
-    return df.mapInPandas(
-        run, "asset_id bigint, n_samples int, n_crossings bigint"
+    return map_rows(
+        df, ["asset_id", "payload"], crossings,
+        "asset_id bigint, n_samples int, n_crossings bigint",
     )

@@ -1,13 +1,17 @@
 """North-star multimodal queries: binary payload columns synthesized from
-the documents fixture (UTF-8 bytes of the text stand in for media bytes —
-the container has no codecs, and the plumbing is the tested surface)."""
+the documents fixture. The `_media` queries (metadata, stub feature
+extract, frame sample) use the UTF-8 bytes of each text as the payload;
+every other query decodes a real BMP/PNG/JPEG/WAV/Y4M corpus generated
+per doc_id (`_bmp_corpus` and its siblings) whose pixels or samples are
+closed-form in doc_id, so the oracles recompute them in SQL."""
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_aws_spark.multimodal import ops
+from etl_aws_spark.multimodal import jpeg, ops
 from etl_aws_spark.registry import load, query
 
 
@@ -173,25 +177,10 @@ def _bmp_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decoder must produce."""
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
+    def one(did):
+        return [(did, ops.encode_bmp24(ops.fixture_pixels(did)))]
 
-        from etl_aws_spark.multimodal.ops import encode_bmp24
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 13, 4 + (did * 7) % 11
-                x = np.arange(w)[None, :, None]
-                y = np.arange(h)[:, None, None]
-                c = np.arange(3)[None, None, :]
-                v = (did * 31 + x * 7 + y * 3 + c * 11) % 256
-                payloads.append(encode_bmp24(v.astype(np.uint8)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return docs.mapInPandas(gen, "doc_id bigint, payload binary")
+    return ops.map_rows(docs, ["doc_id"], one, "doc_id bigint, payload binary")
 
 
 @query(
@@ -247,26 +236,11 @@ def _png_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths are all exercised and checked by the closed-form pixel oracle."""
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
+    def one(did):
+        v = ops.fixture_pixels(did)
+        return [(did, ops.encode_png_rgb8(v, [(did + r) % 5 for r in range(v.shape[0])]))]
 
-        from etl_aws_spark.multimodal.ops import encode_png_rgb8
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 13, 4 + (did * 7) % 11
-                x = np.arange(w)[None, :, None]
-                y = np.arange(h)[:, None, None]
-                c = np.arange(3)[None, None, :]
-                v = (did * 31 + x * 7 + y * 3 + c * 11) % 256
-                filters = [(did + r) % 5 for r in range(h)]
-                payloads.append(encode_png_rgb8(v.astype(np.uint8), filters))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return docs.mapInPandas(gen, "doc_id bigint, payload binary")
+    return ops.map_rows(docs, ["doc_id"], one, "doc_id bigint, payload binary")
 
 
 @query(
@@ -324,24 +298,14 @@ def _jpeg_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly), so the closed-form pixel oracle checks the true decode."""
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
+    def one(did):
+        w, h = 6 + did % 19, 6 + (did * 7) % 17
+        x = np.arange(w)[None, :]
+        y = np.arange(h)[:, None]
+        v = 128 + 2 * (((did * 5 + (x // 8) * 3 + (y // 8) * 7) % 121) - 60)
+        return [(did, jpeg.encode_jpeg_gray8(v.astype(np.uint8)))]
 
-        from etl_aws_spark.multimodal.jpeg import encode_jpeg_gray8
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 6 + did % 19, 6 + (did * 7) % 17
-                x = np.arange(w)[None, :]
-                y = np.arange(h)[:, None]
-                v = 128 + 2 * (((did * 5 + (x // 8) * 3 + (y // 8) * 7) % 121) - 60)
-                payloads.append(encode_jpeg_gray8(v.astype(np.uint8)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return docs.mapInPandas(gen, "doc_id bigint, payload binary")
+    return ops.map_rows(docs, ["doc_id"], one, "doc_id bigint, payload binary")
 
 
 @query(
@@ -404,31 +368,20 @@ def _jpeg_color_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding identical."""
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
+    def one(did):
+        w, h = 6 + did % 19, 6 + (did * 7) % 17
+        ycc = np.zeros((h, w, 3), np.uint8)
+        for by in range(-(-h // 8)):
+            for bx in range(-(-w // 8)):
+                y = 128 + 2 * (((did * 5 + bx * 3 + by * 7) % 41) - 20)
+                k = ((did * 3 + bx + by * 2) % 5) - 2
+                m = ((did * 11 + bx * 5 + by * 3) % 5) - 2
+                ycc[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
+                    y, 128 + 17 * k, 128 + 17 * m,
+                )
+        return [(did, jpeg.encode_jpeg_color(ycc, from_ycbcr=True))]
 
-        from etl_aws_spark.multimodal.jpeg import encode_jpeg_color
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 6 + did % 19, 6 + (did * 7) % 17
-                bw, bh = -(-w // 8), -(-h // 8)
-                ycc = np.zeros((h, w, 3), np.uint8)
-                for by in range(bh):
-                    for bx in range(bw):
-                        y = 128 + 2 * (((did * 5 + bx * 3 + by * 7) % 41) - 20)
-                        k = ((did * 3 + bx + by * 2) % 5) - 2
-                        m = ((did * 11 + bx * 5 + by * 3) % 5) - 2
-                        ycc[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                            y, 128 + 17 * k, 128 + 17 * m,
-                        )
-                payloads.append(encode_jpeg_color(ycc, from_ycbcr=True))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return docs.mapInPandas(gen, "doc_id bigint, payload binary")
+    return ops.map_rows(docs, ["doc_id"], one, "doc_id bigint, payload binary")
 
 
 @query(
@@ -515,23 +468,11 @@ def _wav_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoder must produce."""
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
+    def one(did):
+        v = ((did * 131 + np.arange(64 + did % 97) * 17) % 4096) - 2048
+        return [(did, ops.encode_wav16(v.astype(np.int16)))]
 
-        from etl_aws_spark.multimodal.ops import encode_wav16
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 64 + did % 97
-                i = np.arange(n)
-                v = ((did * 131 + i * 17) % 4096) - 2048
-                payloads.append(encode_wav16(v.astype(np.int16)))
-            yield pd.DataFrame({"asset_id": pdf["doc_id"].values, "payload": payloads})
-
-    return docs.mapInPandas(gen, "asset_id bigint, payload binary")
+    return ops.map_rows(docs, ["doc_id"], one, "asset_id bigint, payload binary")
 
 
 @query(
@@ -590,34 +531,23 @@ def _y4m_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute every sampled frame's statistics analytically."""
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
+    def one(did):
+        w, h = 8 + (did % 5) * 2, 6 + (did % 3) * 2
+        x = np.arange(w)[None, :]
+        y = np.arange(h)[:, None]
+        u = np.arange(w // 2)[None, :]
+        v = np.arange(h // 2)[:, None]
+        frames = [
+            (
+                ((did * 31 + f * 29 + x * 7 + y * 3) % 256).astype(np.uint8),
+                ((did * 17 + f * 5 + u * 11 + v * 13) % 256).astype(np.uint8),
+                ((did * 23 + f * 7 + u * 3 + v * 19) % 256).astype(np.uint8),
+            )
+            for f in range(2 + did % 4)
+        ]
+        return [(did, ops.encode_y4m_420(frames))]
 
-        from etl_aws_spark.multimodal.ops import encode_y4m_420
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 8 + (did % 5) * 2, 6 + (did % 3) * 2
-                nf = 2 + did % 4
-                x = np.arange(w)[None, :]
-                y = np.arange(h)[:, None]
-                u = np.arange(w // 2)[None, :]
-                v = np.arange(h // 2)[:, None]
-                frames = []
-                for f in range(nf):
-                    yp = (did * 31 + f * 29 + x * 7 + y * 3) % 256
-                    cb = (did * 17 + f * 5 + u * 11 + v * 13) % 256
-                    cr = (did * 23 + f * 7 + u * 3 + v * 19) % 256
-                    frames.append(
-                        (yp.astype(np.uint8), cb.astype(np.uint8), cr.astype(np.uint8))
-                    )
-                payloads.append(encode_y4m_420(frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return docs.mapInPandas(gen, "doc_id bigint, payload binary")
+    return ops.map_rows(docs, ["doc_id"], one, "doc_id bigint, payload binary")
 
 
 @query(
@@ -685,45 +615,22 @@ def multimodal_video_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode work before any shuffle."""
     corpus = _y4m_corpus(spark, sf_dir)
 
-    def extract(batches):
-        import numpy as np
-        import pandas as pd
-
-        from etl_aws_spark.multimodal.ops import decode_y4m_420
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, frames = decode_y4m_420(bytes(payload))
-                for fi in range(0, len(frames), 2):
-                    y, cb, cr = frames[fi]
-                    ys = int(y.astype(np.int64).sum())
-                    rows.append(
-                        {
-                            "asset_id": int(did),
-                            "frame_idx": fi,
-                            "width": w,
-                            "height": h,
-                            "y_sum": ys,
-                            "y_min": int(y.min()),
-                            "y_max": int(y.max()),
-                            "y_mean": ys / (w * h),
-                            "cb_mean": float(cb.astype(np.int64).sum())
-                            / ((w // 2) * (h // 2)),
-                            "cr_mean": float(cr.astype(np.int64).sum())
-                            / ((w // 2) * (h // 2)),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "frame_idx", "width", "height", "y_sum",
-                    "y_min", "y_max", "y_mean", "cb_mean", "cr_mean",
-                ],
+    def extract(did, payload):
+        w, h, frames = ops.decode_y4m_420(bytes(payload))
+        rows = []
+        for fi in range(0, len(frames), 2):
+            y, cb, cr = frames[fi]
+            ys = int(y.astype(np.int64).sum())
+            nc = (w // 2) * (h // 2)
+            rows.append(
+                (did, fi, w, h, ys, int(y.min()), int(y.max()), ys / (w * h),
+                 float(cb.astype(np.int64).sum()) / nc,
+                 float(cr.astype(np.int64).sum()) / nc)
             )
+        return rows
 
-    out = corpus.mapInPandas(
-        extract,
+    out = ops.map_rows(
+        corpus, ["doc_id", "payload"], extract,
         "asset_id bigint, frame_idx int, width int, height int, "
         "y_sum bigint, y_min int, y_max int, "
         "y_mean double, cb_mean double, cr_mean double",
@@ -808,44 +715,12 @@ def multimodal_image_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFram
     anywhere, so DuckDB's signed-shift limit is never touched."""
     corpus = _bmp_corpus(spark, sf_dir)
 
-    def sigs_of(batches):
-        import numpy as np
-        import pandas as pd
+    def sigs_of(did, payload):
+        arr = ops.decode_bmp24(bytes(payload))
+        return [(did, arr.shape[1], arr.shape[0], *ops.dhash_bands(arr))]
 
-        from etl_aws_spark.multimodal.ops import decode_bmp24
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = decode_bmp24(bytes(payload))
-                h, w, _ = arr.shape
-                g = arr[:, :, 1].astype(np.int64)  # green channel
-                gy = (np.arange(8) * h) // 8
-                gx = (np.arange(9) * w) // 9
-                grid = g[np.ix_(gy, gx)]
-                bits = (grid[:, :8] > grid[:, 1:]).astype(np.int64)
-                flat = bits.reshape(-1)  # k = gy*8 + gx
-                bv = [
-                    int((flat[b * 16 : (b + 1) * 16] << np.arange(16)).sum())
-                    for b in range(4)
-                ]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "w": w,
-                        "h": h,
-                        "b0": bv[0],
-                        "b1": bv[1],
-                        "b2": bv[2],
-                        "b3": bv[3],
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "w", "h", "b0", "b1", "b2", "b3"]
-            )
-
-    sigs = corpus.mapInPandas(
-        sigs_of,
+    sigs = ops.map_rows(
+        corpus, ["doc_id", "payload"], sigs_of,
         "doc_id bigint, w int, h int, b0 bigint, b1 bigint, b2 bigint, b3 bigint",
     ).localCheckpoint(eager=True)
     return _sig_neardup_pairs(
@@ -911,32 +786,20 @@ def multimodal_audio_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> Da
     sample, energy, bit, and pair from the closed-form waveform."""
     corpus = _wav_corpus(spark, sf_dir)
 
-    def prints_of(batches):
-        import numpy as np
-        import pandas as pd
+    def prints_of(did, payload):
+        v = np.asarray(ops.decode_wav16(bytes(payload))[0], dtype=np.int64)
+        nf = len(v) // 8
+        e = (v[: nf * 8].reshape(nf, 8) ** 2).sum(axis=1)
+        bits = (e[:-1] > e[1:]).astype(np.int64)
+        bvs = [-1, -1]
+        for bi in range((len(bits) + 15) // 16):
+            chunk = bits[bi * 16 : (bi + 1) * 16]
+            bvs[bi] = int((chunk << np.arange(len(chunk))).sum())
+        return [(did, len(v), *bvs)]
 
-        from etl_aws_spark.multimodal.ops import decode_wav16
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["asset_id"], pdf["payload"]):
-                samples, _rate = decode_wav16(bytes(payload))
-                v = np.asarray(samples, dtype=np.int64)
-                n = len(v)
-                nf = n // 8
-                e = (v[: nf * 8].reshape(nf, 8) ** 2).sum(axis=1)
-                bits = (e[:-1] > e[1:]).astype(np.int64)
-                bvs = [-1, -1]
-                for bi in range((len(bits) + 15) // 16):
-                    chunk = bits[bi * 16 : (bi + 1) * 16]
-                    bvs[bi] = int((chunk << np.arange(len(chunk))).sum())
-                rows.append(
-                    {"doc_id": int(did), "n": n, "v0": bvs[0], "v1": bvs[1]}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "n", "v0", "v1"])
-
-    sigs = corpus.mapInPandas(
-        prints_of, "doc_id bigint, n int, v0 bigint, v1 bigint"
+    sigs = ops.map_rows(
+        corpus, ["asset_id", "payload"], prints_of,
+        "doc_id bigint, n int, v0 bigint, v1 bigint",
     ).localCheckpoint(eager=True)
     return _sig_neardup_pairs(sigs, ["n"], ["v0", "v1"], max_hamming=3)
 
@@ -1024,49 +887,17 @@ def pipeline_multimodal_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form pixel function."""
     corpus = _bmp_corpus(spark, sf_dir)
 
-    def analyze(batches):
-        import numpy as np
-        import pandas as pd
-
-        from etl_aws_spark.multimodal.ops import decode_bmp24
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = decode_bmp24(bytes(payload))
-                h, w, _ = arr.shape
-                mean_i = float(arr.astype(np.int64).sum()) / (w * h * 3 * 255.0)
-                g = arr[:, :, 1].astype(np.int64)
-                gy = (np.arange(8) * h) // 8
-                gx = (np.arange(9) * w) // 9
-                grid = g[np.ix_(gy, gx)]
-                bits = (grid[:, :8] > grid[:, 1:]).astype(np.int64).reshape(-1)
-                bv = [
-                    int((bits[b * 16 : (b + 1) * 16] << np.arange(16)).sum())
-                    for b in range(4)
-                ]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "w": w,
-                        "h": h,
-                        "mean_i": mean_i,
-                        "b0": bv[0],
-                        "b1": bv[1],
-                        "b2": bv[2],
-                        "b3": bv[3],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "w", "h", "mean_i", "b0", "b1", "b2", "b3"],
-            )
+    def analyze(did, payload):
+        arr = ops.decode_bmp24(bytes(payload))
+        h, w, _ = arr.shape
+        mean_i = float(arr.astype(np.int64).sum()) / (w * h * 3 * 255.0)
+        return [(did, w, h, mean_i, *ops.dhash_bands(arr))]
 
     class_cols = ["w", "h"]
     band_cols = ["b0", "b1", "b2", "b3"]
     key = class_cols + band_cols
-    sigs = corpus.mapInPandas(
-        analyze,
+    sigs = ops.map_rows(
+        corpus, ["doc_id", "payload"], analyze,
         "doc_id bigint, w int, h int, mean_i double, "
         "b0 bigint, b1 bigint, b2 bigint, b3 bigint",
     ).localCheckpoint(eager=True)
@@ -1291,34 +1122,20 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one Arrow-batched mapInPandas decodes each stream ONCE and
     emits |frames−1| scalar rows per asset — no shuffle, the decode-once
     law; thresholding is a scalar expression."""
-    import pandas as pd
-
     corpus = _y4m_corpus(spark, sf_dir)
 
-    def run(batches):
-        import numpy as np
+    def run(did, payload):
+        w, h, frames = ops.decode_y4m_420(bytes(payload))
+        rows = []
+        for f in range(len(frames) - 1):
+            a = frames[f][0].astype(np.int64)
+            b = frames[f + 1][0].astype(np.int64)
+            s = int(np.abs(b - a).sum())
+            rows.append((did, f, f + 1, w, h, s, s / (w * h)))
+        return rows
 
-        from etl_aws_spark.multimodal.ops import decode_y4m_420
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, frames = decode_y4m_420(bytes(payload))
-                for f in range(len(frames) - 1):
-                    a = frames[f][0].astype(np.int64)
-                    b = frames[f + 1][0].astype(np.int64)
-                    s = int(np.abs(b - a).sum())
-                    rows.append((int(did), f, f + 1, w, h, s, s / (w * h)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "frame_from", "frame_to", "width", "height",
-                    "abs_delta_sum", "mean_abs_delta",
-                ],
-            )
-
-    out = corpus.mapInPandas(
-        run,
+    out = ops.map_rows(
+        corpus, ["doc_id", "payload"], run,
         "asset_id bigint, frame_from int, frame_to int, width int, height int, "
         "abs_delta_sum bigint, mean_abs_delta double",
     )

@@ -470,21 +470,14 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     trusting the writer. At 100 TB this is the entry point that feeds
     `multimodal_feature_extract_*`: Spark parallelizes over files, and
     `pathGlobFilter`/`recursiveFileLookup` prune at listing time."""
-    import numpy as np
-
     root = _cache_dir(sf_dir, "binary_assets")
     if not _done(root):
-        from etl_aws_spark.multimodal.ops import encode_bmp24
+        from etl_aws_spark.multimodal.ops import encode_bmp24, fixture_pixels
 
         os.makedirs(root, exist_ok=True)
         for did in range(64):
-            w, h = 4 + did % 13, 4 + (did * 7) % 11
-            x = np.arange(w)[None, :, None]
-            y = np.arange(h)[:, None, None]
-            c = np.arange(3)[None, None, :]
-            v = ((did * 31 + x * 7 + y * 3 + c * 11) % 256).astype(np.uint8)
             with open(os.path.join(root, f"asset_{did:04d}.bmp"), "wb") as f:
-                f.write(encode_bmp24(v))
+                f.write(encode_bmp24(fixture_pixels(did)))
         with open(os.path.join(root, "_SUCCESS"), "w"):
             pass
     df = (

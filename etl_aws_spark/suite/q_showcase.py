@@ -56,36 +56,44 @@ def showcase_topk_revenue_3way(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "showcase_regional_revenue_5way",
     oracle="""
-    SELECT n.n_name,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) + 0.0 AS revenue
-    FROM region r
-    JOIN nation n ON r.r_regionkey = n.n_regionkey
-    JOIN customer c ON n.n_nationkey = c.c_nationkey
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    WHERE r.r_name = 'ASIA'
-    GROUP BY n.n_name
+    WITH s AS (
+      SELECT n.n_name,
+             sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
+                 * CAST(round((1 - l.l_discount) * 100) AS BIGINT)) AS s
+      FROM region r
+      JOIN nation n ON r.r_regionkey = n.n_regionkey
+      JOIN customer c ON n.n_nationkey = c.c_nationkey
+      JOIN orders o ON c.c_custkey = o.o_custkey
+      JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+      WHERE r.r_name = 'ASIA'
+      GROUP BY n.n_name
+    )
+    SELECT n_name, CAST((s + 50) // 100 AS DOUBLE) / 100.0 AS revenue FROM s
     """,
     category="showcase",
 )
 def showcase_regional_revenue_5way(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape (minus the supplier leg the fixtures can't close):
     region→nation→customer dimension chain folds into broadcast joins; only
-    orders⋈lineitem shuffles."""
+    orders⋈lineitem shuffles. Prices and discounts carry 2 decimals, so
+    revenue folds exactly as an integer in 1e-4 units, then rounds half-up
+    to cents: a double sum rounded to 2 decimals depends on the summation
+    order, and two engines land a half-cent total on different cents."""
     r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     n = load(spark, sf_dir, "nation")
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     l = load(spark, sf_dir, "lineitem")
+    price = F.round(F.col("l_extendedprice") * 100).cast("bigint")
+    keep = F.round((1 - F.col("l_discount")) * 100).cast("bigint")
     return (
         r.join(n, r.r_regionkey == n.n_regionkey)
         .join(c, n.n_nationkey == c.c_nationkey)
         .join(o, c.c_custkey == o.o_custkey)
         .join(l, o.o_orderkey == l.l_orderkey)
         .groupBy("n_name")
-        .agg(
-            rnd(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue")
-        )
+        .agg(F.sum(price * keep).alias("s"))
+        .select("n_name", (F.expr("(s + 50) div 100").cast("double") / 100.0).alias("revenue"))
     )
 
 

@@ -9,6 +9,31 @@ from pyspark.sql import functions as F
 from etl_aws_spark.multimodal import ops
 
 
+def test_map_rows_fans_out_per_row_with_ddl_schema(spark):
+    """map_rows hands fn each row's cols values and keeps the tuples it
+    returns — none, one or three here — under the DDL's names and types;
+    an input with no rows still carries that schema."""
+    df = spark.range(6).select("id", F.concat(F.lit("t"), F.col("id").cast("string")).alias("tag"))
+
+    def fn(i, tag):
+        return [(i, k, f"{tag}.{k}", i / 2) for k in range((0, 1, 3)[i % 3])]
+
+    ddl = "src bigint, k int, label string, half double"
+    out = ops.map_rows(df, ["id", "tag"], fn, ddl)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("src", "bigint"), ("k", "int"), ("label", "string"), ("half", "double"),
+    ]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 0, "t1.0", 0.5),
+        (2, 0, "t2.0", 1.0), (2, 1, "t2.1", 1.0), (2, 2, "t2.2", 1.0),
+        (4, 0, "t4.0", 2.0),
+        (5, 0, "t5.0", 2.5), (5, 1, "t5.1", 2.5), (5, 2, "t5.2", 2.5),
+    ]
+    empty = ops.map_rows(df.filter("id < 0"), ["id", "tag"], fn, ddl)
+    assert empty.schema == out.schema
+    assert empty.collect() == []
+
+
 def test_bmp_roundtrip_exact():
     rng = np.random.RandomState(9)
     for w, h in [(1, 1), (3, 2), (5, 7), (16, 4)]:  # odd widths exercise padding
