@@ -47,18 +47,6 @@ def rmtree(spark: SparkSession, path: str) -> None:
         fs.delete(jpath, True)
 
 
-def rename(spark: SparkSession, src: str, dst: str) -> bool:
-    """Filesystem rename (atomic on HDFS/local; copy-based on S3A, where
-    the commit RECORD — not the rename — defines truth and crash recovery
-    re-runs the publish). Parent dirs of ``dst`` are created as needed."""
-    fs, jsrc = _fs(spark, src)
-    jdst = _fs(spark, dst)[1]
-    parent = jdst.getParent()
-    if parent is not None and not fs.exists(parent):
-        fs.mkdirs(parent)
-    return bool(fs.rename(jsrc, jdst))
-
-
 def list_names(spark: SparkSession, path: str) -> list[str]:
     """Child names of a directory ([] if absent) — the Hadoop
     ``listStatus`` twin of ``os.listdir``."""

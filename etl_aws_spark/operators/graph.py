@@ -2,19 +2,19 @@
 
 Near-dup pipelines (MinHash/LSH, SimHash, embedding blocking) emit PAIRS;
 turning pairs into groups is a connected-components problem. One LSH round
-(`text/dedup.py minhash_lsh_dedup`) collapses docs sharing a band, and
-`lsh_closure` compresses pointer chains — but a pure functional-graph
-compression cannot merge two branches of a component that hooked to
-different roots (A<B<C<D with edges A–C, C–D, D–B: C hooks to A, D hooks
-to B, and no pointer chain connects them). This module is the always-
+(`text/dedup.py minhash_lsh_dedup`) collapses docs sharing a band, but
+chains across bands need a closure, and pointer jumping alone (a pure
+functional-graph compression) cannot merge two branches of a component
+that hooked to different roots (A<B<C<D with edges A–C, C–D, D–B: C hooks
+to A, D hooks to B, and no pointer chain connects them). This module is the always-
 correct form: alternating min-label propagation over the edge list
 (invariant-preserving; fixpoint = per-component min id) with pointer-jump
 compression (accelerates chains to O(log diameter) rounds).
 
 Scale shape per round: one (vertex)-keyed shuffle for the neighbor-min
 aggregate and one self-join on a 2-column (id, label) frame —
-`localCheckpoint` keeps lineage flat, convergence probes run every other
-round (house pattern from `lsh_closure`).
+`localCheckpoint` keeps lineage flat, and each materialized super-round
+runs two steps whose convergence probe rides that checkpoint's job.
 """
 
 from __future__ import annotations

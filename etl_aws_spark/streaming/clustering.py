@@ -67,9 +67,7 @@ def init_state(spark: SparkSession, state: str) -> None:
         [], T.StructType([T.StructField("doc_id", T.LongType()),
                           T.StructField("component_id", T.LongType())])
     )
-    st.write_tree(bmin, 0, "bmin")
-    st.write_tree(labels, 0, "labels")
-    st.commit(0, batch_id=-1, base=0)
+    st.publish({"bmin": bmin, "labels": labels}, batch_id=-1)
 
 
 def _current(st: VersionedState):
@@ -102,8 +100,9 @@ def run_clustering_pass(
     st = VersionedState(spark, state)
 
     def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+        # no emptiness probe: an availableNow file-source batch only runs
+        # for new files, and an empty one still folds correctly (no new
+        # docs, an unchanged clustering, one commit) without a job to ask
         if st.already_folded(batch_id):
             return  # at-least-once replay of a committed fold
         n = st.version()
@@ -171,15 +170,6 @@ def run_clustering_pass(
         .writeStream.foreachBatch(fold_batch)
         .option("checkpointLocation", ckpt)
     )
-
-
-def compact_state(spark: SparkSession, state: str) -> int:
-    """Fold the delta chain into a fresh single-version base (read-side
-    union width resets to 1; the clustering is unchanged). Returns the
-    new base version."""
-    st = VersionedState(spark, state)
-    bmin_cur, labels_cur = _current(st)
-    return st.compact({"bmin": bmin_cur, "labels": labels_cur})
 
 
 def read_clusters(spark: SparkSession, state: str) -> DataFrame:

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import posixpath
-import re
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -11,51 +9,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
-from etl_aws_spark import fsutil
+from etl_aws_spark.streaming.state import VersionedState
 
 
-# --- atomic, replay-idempotent parquet state commits -----------------------
-#
-# foreachBatch is at-least-once: a retried micro-batch re-invokes the sink
-# with the SAME batch_id, and a crash mid-write must never corrupt the
-# committed state. The state sinks below therefore commit through a
-# versioned-dir + commit-record + publish protocol, all probed through the
-# Hadoop FileSystem API (`fsutil`) so it works where the driver's POSIX
-# view is not the data plane (HDFS/S3A — r12 verdict: no symlinks, no
-# `os.*` in version resolution):
-#
-#   <state_path>.versions/v{batch_id}/  — each commit writes a FRESH dir
-#   <state_path>.commits/b{batch_id}    — empty, name-encoded commit record
-#   <state_path>/                       — the published (readable) copy
-#
-# Order: write version dir → touch commit record (THE commit point; the
-# record's full name appears only at create+close, so it cannot tear) →
-# publish by delete-old + rename-version-into-place → GC older records.
-# `spark.read.parquet(state_path)` keeps working unchanged for every
-# downstream reader. Crash windows: mid-version-write → record absent, the
-# replay overwrites the partial dir; between record and publish →
-# `_committed_batch_id` sees the still-present version dir and finishes
-# the publish (healing is idempotent, and on this availableNow/foreachBatch
-# lifecycle no reader races the sink). A replayed batch (batch_id <=
-# committed) is skipped instead of double-merged — the batch-split
-# invariance that cell-wise CMS addition and 'latest-by' upserts
-# advertise, now including under retries. These states are bounded
-# aggregates (sketch grids, latest-per-key), so the per-batch full
-# rewrite is O(state), deliberately — the delta protocol for
-# corpus-growing state lives in `streaming/state.py`.
-#
-# LIFECYCLE COUPLING (r6 advice, made explicit): the state tree and the
-# streaming checkpoint are ONE unit — batch_ids are only monotonic within
-# a single checkpoint lineage. Deleting the checkpoint while keeping the
-# state resets batch_ids to 0, and the replay guard above would then skip
-# every fresh batch as "already committed"; keeping the checkpoint while
-# deleting the state silently drops the accumulated grid. Always drop or
-# keep <ckpt> and <state_path>(.versions/.commits) together — the suite's
-# fixture caches do this by rooting both under the same
-# cache_dir(sf_dir, ...) tree, which the content-fingerprinted tag
-# abandons atomically.
+# A state sink's state and its streaming checkpoint are ONE unit: batch_ids
+# are only monotonic within one checkpoint lineage, so drop or keep both.
 
-_COMMIT_RE = re.compile(r"^b(\d+)$")
+# The one tree a state sink's versions hold.
+STATE_TREE = "rows"
 
 # How long `run_available_now` waits for a run to finish before it stops
 # the query and fails: a fixture-sized catch-up finishes in seconds, so a
@@ -63,46 +24,10 @@ _COMMIT_RE = re.compile(r"^b(\d+)$")
 RUN_TIMEOUT_S = 300
 
 
-def _committed_batch_id(spark: SparkSession, state_path: str) -> int | None:
-    """batch_id of the newest committed state version (None if no state),
-    finishing any crash-interrupted publish as a side effect."""
-    ids = [
-        int(m.group(1))
-        for name in fsutil.list_names(spark, state_path + ".commits")
-        if (m := _COMMIT_RE.match(name))
-    ]
-    if not ids:
-        return None
-    done = max(ids)
-    vdir = posixpath.join(state_path + ".versions", "v%012d" % done)
-    if fsutil.exists(spark, vdir):
-        # committed but not yet published: finish the publish
-        fsutil.rmtree(spark, state_path)
-        fsutil.rename(spark, vdir, state_path)
-    return done
-
-
-def _commit_state(df: DataFrame, state_path: str, batch_id: int) -> None:
-    """Materialize df into a fresh version dir, commit it via the
-    name-encoded record, publish it at ``state_path``, GC older records."""
-    spark = df.sparkSession
-    vdir = posixpath.join(state_path + ".versions", "v%012d" % batch_id)
-    df.write.mode("overwrite").parquet(vdir)
-    commits = state_path + ".commits"
-    fsutil.touch(spark, posixpath.join(commits, "b%d" % batch_id))
-    fsutil.rmtree(spark, state_path)
-    fsutil.rename(spark, vdir, state_path)
-    for name in fsutil.list_names(spark, commits):
-        m = _COMMIT_RE.match(name)
-        if m and int(m.group(1)) < batch_id:
-            fsutil.rmtree(spark, posixpath.join(commits, name))
-
-
-def reset_state(spark: SparkSession, state_path: str) -> None:
-    """Remove a published state, its version store, and its commit
-    records (test/rebuild hook)."""
-    for p in (state_path, state_path + ".versions", state_path + ".commits"):
-        fsutil.rmtree(spark, p)
+def read_state(spark: SparkSession, path: str) -> DataFrame:
+    """The committed state of a state sink rooted at ``path``; raises
+    ``FileNotFoundError`` when nothing is committed there."""
+    return VersionedState(spark, path).read_append(STATE_TREE)
 
 
 def read_stream(
@@ -242,21 +167,20 @@ def _merge_state_stream(
 ) -> None:
     """Run ``stream_df`` to the end, folding it into the bounded parquet
     state at ``state_path``: each micro-batch reduces itself with
-    ``partial``; when a state is published, ``merge`` re-reduces the union
-    of that partial with it. The result commits through the versioned-dir
-    + rename-publish protocol (`_commit_state`), and a replayed batch_id
-    is skipped, so ``merge`` need not be idempotent."""
+    ``partial``; when a state is committed, ``merge`` re-reduces the union
+    of that partial with it. The result is published as the next
+    `VersionedState` snapshot, and a replayed batch_id is skipped, so
+    ``merge`` need not be idempotent."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        done = _committed_batch_id(spark, state_path)
-        if done is not None and batch_id <= done:
+        st = VersionedState(batch_df.sparkSession, state_path)
+        if st.already_folded(batch_id):
             return  # at-least-once replay of an already-merged batch
         g = partial(batch_df)
-        if fsutil.exists(spark, posixpath.join(state_path, "_SUCCESS")):
-            prev = spark.read.parquet(state_path).select(*g.columns)
+        if st.version() >= 0:
+            prev = st.read_append(STATE_TREE).select(*g.columns)
             g = merge(g.unionByName(prev))
-        _commit_state(g, state_path, batch_id)
+        st.publish({STATE_TREE: g}, batch_id)
 
     writer = stream_df.writeStream.foreachBatch(sink)
     if checkpoint:
@@ -316,10 +240,10 @@ def upsert_latest_state(
     ``order_cols`` ordering, (2) unions the existing state, (3) re-collapses
     and atomically replaces the state. The batch-side collapse first means
     the expensive merge window only ever sees |keys| + |batch keys| rows,
-    never raw updates. Commits go through the versioned-dir + rename-publish
-    protocol (`_commit_state`): the merged frame writes to a FRESH version
-    dir (so the lazy read of the old state never races its own overwrite)
-    and replayed batch_ids are skipped. Deterministic under ANY batch split:
+    never raw updates. Each fold publishes a `VersionedState` snapshot:
+    the merged frame writes to a FRESH version dir (so the lazy read of
+    the old state never races its own overwrite) and replayed batch_ids
+    are skipped. Deterministic under ANY batch split:
     'latest by (order_cols)' is associative, so replaying with different
     micro-batch boundaries converges to the same state — the invariant the
     checkpoint-restart test replays. At warehouse scale the same shape
@@ -356,7 +280,7 @@ def cms_merge_stream(
     streaming frequency sketch (state is depth·width longs FOREVER,
     independent of stream length or key cardinality, and addition is
     associative so ANY batch split converges to the batch-built grid —
-    the invariant the batch-parity oracle checks — and the rename-publish
+    the invariant the batch-parity oracle checks — and the versioned
     commit with a batch_id replay guard keeps it true under foreachBatch's
     at-least-once retries and mid-write crashes). The ingest side never
     sees per-key state; exact counts exist only in the offline accuracy
@@ -405,7 +329,7 @@ def hll_merge_stream(
     state by register-wise MAX — the lossless HLL union. Max-merge is
     associative AND idempotent, so any batch split (and even a replayed
     merge) converges to the batch-built register table — the invariant
-    the batch-parity oracle checks; the rename-publish commit with a
+    the batch-parity oracle checks; the versioned commit with a
     batch_id replay guard covers mid-write crashes. State is at most
     |groups|·2^p rows forever, independent of stream length or key
     cardinality."""
@@ -519,7 +443,7 @@ def hdr_merge_stream(
     cell-wise ADDITION — the mergeable quantile state (~27 integer cells
     per group FOREVER) that replaces a full sort for p50/p99 readouts.
     Addition is associative so any batch split converges to the
-    batch-built histogram, and the rename-publish commit's batch_id guard
+    batch-built histogram, and the versioned commit's batch_id guard
     keeps the sum exact under at-least-once retries (the
     `cms_merge_stream` discipline)."""
 
@@ -565,8 +489,8 @@ def ivf_assign_stream(
     cell occupancy and centroid drift — answers "is the persisted coarse
     quantizer still representative of the arriving data", the index-health
     monitor an embedding ingest pipeline runs continuously. Same commit
-    discipline as every sketch sink here (versioned dir + rename-publish,
-    batch_id replay guard)."""
+    discipline as every sketch sink here (versioned snapshot + commit
+    record, batch_id replay guard)."""
     from pyspark.sql import Window
 
     from etl_aws_spark.similarity.knn import _fold_dot

@@ -92,7 +92,6 @@ def init_state(
     edges0 = knn.knn_join(
         old, "vec_id", "embedding", "label", dim, k=k, budget=budget
     ).select("id", "neighbor_id", "cos")
-    st.write_tree(edges0, 0, "edges")
     # in_pool directly from the pool window's rank — the SHARED
     # knn.pool_rank_window definition (r13 ADVICE: the salt literal was
     # duplicated here; now knn_pool and this flag can't silently
@@ -103,8 +102,7 @@ def init_state(
         "vec_id", "embedding", "label",
         (F.row_number().over(wpool) <= budget).alias("in_pool"),
     )
-    st.write_tree(corpus0, 0, "corpus")
-    st.commit(0, batch_id=-1, base=0)
+    st.publish({"edges": edges0, "corpus": corpus0}, batch_id=-1)
 
 
 def reset_state(

@@ -1,8 +1,9 @@
 """Shared versioned-state store for ``foreachBatch`` folds.
 
-One protocol, three guarantees, used by both streaming lifecycles
-(`streaming/clustering.py`, `streaming/maintenance.py`) so the discipline
-is written once (r12 verdict #3):
+One protocol, three guarantees, used by every streaming state sink: the
+bounded-state sinks of `streaming/ingest.py` (and the SCD2 sink built on
+them) and both lifecycles (`streaming/clustering.py`,
+`streaming/maintenance.py`), so the discipline is written once:
 
 1. **Atomic, engine-visible commits** (r12 verdict #2). A version's
    parquet trees live under ``root/v{n}/{tree}``; they become REAL only
@@ -12,7 +13,8 @@ is written once (r12 verdict #3):
    ``close`` complete, so readers can never observe a half commit; a
    crash mid-tree-write leaves an uncommitted ``v{n+1}`` that every
    reader ignores. All probing goes through the Hadoop ``FileSystem``
-   API (`fsutil`), never the driver's POSIX view.
+   API (`fsutil`), never the driver's POSIX view, and nothing is ever
+   renamed (a directory rename is a copy on S3A).
 
 2. **Replay idempotency** (r12 ADVICE). ``foreachBatch`` is
    at-least-once and Structured Streaming replays a crashed batch under
@@ -23,13 +25,15 @@ is written once (r12 verdict #3):
    offset commit → ``already_folded`` is true and the replay returns
    without touching state. Double-folding is impossible by construction.
 
-3. **O(batch) write I/O** (r12 verdict #1). Versions hold DELTAS, not
-   snapshots: readers union versions ``base..latest`` and fold
-   (latest-version-wins per key, plain append, or a consumer-side
-   aggregate such as per-bucket MIN). Per-trigger write I/O scales with
-   the batch, not the corpus — the snapshot-rewrite anti-pattern the r12
-   verdict flagged. ``compact`` folds the accumulated deltas into a
-   fresh single-version base (advancing ``base``) so read-side union
+3. **Write I/O sized to the state's shape.** Corpus-growing lifecycle
+   state keeps DELTAS, not snapshots: readers union versions
+   ``base..latest`` and fold (latest-version-wins per key, plain append,
+   or a consumer-side aggregate such as per-bucket MIN), so per-trigger
+   write I/O scales with the batch, not the corpus (r12 verdict #1).
+   Bounded state (sketch grids, latest-per-key tables) instead
+   ``publish``es a full snapshot per fold — O(state) by design — which
+   becomes its own base and prunes every older version and record.
+   ``compact`` is the same publish for a delta chain, so read-side union
    width stays bounded on always-on streams.
 
 ``rollback`` is the reset for a lifecycle replayed over the same base:
@@ -111,14 +115,15 @@ class VersionedState:
         usual; then every ``v{n}`` dir with n > ``version`` goes,
         committed or not. Raises ``ValueError`` if ``version`` has no
         commit record or lies below the current base (compaction already
-        removed what it would restore)."""
+        removed what it would restore, with its record)."""
         cs = self.commits()
         where = "under %s" % self.root
+        if cs and version < cs[-1][2]:
+            raise ValueError(
+                "version %d is below base %d %s" % (version, cs[-1][2], where)
+            )
         if version not in {c[0] for c in cs}:
             raise ValueError("version %d is not committed %s" % (version, where))
-        base = cs[-1][2]
-        if version < base:
-            raise ValueError("version %d is below base %d %s" % (version, base, where))
         for c in reversed(cs):
             if c[0] <= version:
                 break
@@ -192,25 +197,39 @@ class VersionedState:
             .drop("_v", "_mxv")
         )
 
-    # ---- compaction ------------------------------------------------------
+    # ---- snapshots and compaction ----------------------------------------
 
-    def compact(self, folded: dict[str, DataFrame], gc: bool = True) -> int:
-        """Fold the delta chain into a single fresh base version: write
-        each tree's caller-folded frame as version latest+1, commit with
-        ``base`` = that version (carrying the latest batch_id forward, so
-        the replay guard is unaffected), then GC pre-base version dirs.
-        Returns the new base version."""
+    def publish(self, trees: dict[str, DataFrame], batch_id: int) -> int:
+        """Commit ``trees`` as a full snapshot: write them as version
+        latest+1 (0 on an empty store), commit that version as its own
+        base stamped ``batch_id``, then remove every older version dir
+        and commit record. A crash before the record leaves the previous
+        snapshot current; one after it leaves only garbage the next
+        publish removes. Returns the new version."""
+        new_v = self.version() + 1
+        for tree, df in trees.items():
+            self.write_tree(df, new_v, tree)
+        self.commit(new_v, batch_id, base=new_v)
+        for name in fsutil.list_names(self.spark, self.root):
+            m = _VERSION_DIR_RE.match(name)
+            if m and int(m.group(1)) < new_v:
+                fsutil.rmtree(self.spark, posixpath.join(self.root, name))
+        for c in self.commits():
+            if c[0] < new_v:
+                fsutil.rmtree(self.spark, self._record(*c))
+        return new_v
+
+    def compact(self, folded: dict[str, DataFrame]) -> int:
+        """Fold the delta chain into a single fresh base version: publish
+        each tree's caller-folded frame, carrying the latest batch_id
+        forward so the replay guard is unaffected. Returns the new base
+        version."""
         cur = self.latest()
         if cur is None:
             raise FileNotFoundError("nothing to compact under %s" % self.root)
-        latest_v, batch_id, old_base = cur
-        new_v = latest_v + 1
-        for tree, df in folded.items():
-            # the fold reads versions old_base..latest_v; eager-checkpoint
-            # so the write does not re-read dirs gc removes afterwards
-            self.write_tree(df.localCheckpoint(eager=True), new_v, tree)
-        self.commit(new_v, batch_id, base=new_v)
-        if gc:
-            for v in range(old_base, new_v):
-                fsutil.rmtree(self.spark, posixpath.join(self.root, "v%d" % v))
-        return new_v
+        # the folds read the versions publish removes: eager-checkpoint
+        # them first
+        return self.publish(
+            {tree: df.localCheckpoint(eager=True) for tree, df in folded.items()},
+            cur[1],
+        )

@@ -14,6 +14,7 @@ from etl_aws_spark import fsutil
 from etl_aws_spark.registry import load, query
 from etl_aws_spark.sources import writers
 from etl_aws_spark.streaming import ingest
+from etl_aws_spark.streaming.state import VersionedState
 from etl_aws_spark.suite._util import cache_dir as _cache_dir
 
 
@@ -317,6 +318,18 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _reset_uncommitted(spark: SparkSession, state: str, ckpt: str) -> bool:
+    """True when ``state`` holds no committed version. The state and its
+    checkpoint ``ckpt`` are then removed together, so the caller rebuilds
+    both: a checkpoint left behind would mark every landed file as done
+    and fold nothing into the fresh state."""
+    if VersionedState(spark, state).version() >= 0:
+        return False
+    fsutil.rmtree(spark, state)
+    fsutil.rmtree(spark, ckpt)
+    return True
+
+
 @query(
     "streaming_upsert_latest",
     oracle="""
@@ -358,7 +371,7 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("value", T.DoubleType()),
         ]
     )
-    if not fsutil.exists(spark, os.path.join(state_p, "_SUCCESS")):
+    if _reset_uncommitted(spark, state_p, ckpt):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "3")
@@ -368,7 +381,7 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, state_p, keys=["user_id"], order_cols=["ts", "event_id"],
             checkpoint=ckpt,
         )
-    st = spark.read.parquet(state_p)
+    st = ingest.read_state(spark, state_p)
     return st.select(
         "user_id",
         F.col("ts").alias("last_ts"),
@@ -456,7 +469,7 @@ def _events_stream(
         fsutil.rmtree(spark, root)
         ev = load(spark, sf_dir, "events").select(*schema.fieldNames())
         ev.repartition(8).write.mode("overwrite").parquet(landing)
-    ingest.reset_state(spark, state)
+    fsutil.rmtree(spark, state)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 3)
@@ -501,7 +514,7 @@ def streaming_sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream, state = _events_stream(spark, sf_dir, "stream_cms", schema)
     ingest.cms_merge_stream(stream, state, "user_id", depth=4, width=32)
-    return spark.read.parquet(state).select(
+    return ingest.read_state(spark, state).select(
         F.col("depth").cast("int").alias("depth"),
         F.col("bucket").cast("long").alias("bucket"),
         F.col("cell_n").cast("long").alias("cell_n"),
@@ -531,7 +544,7 @@ def streaming_corpus_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     `upsert_latest_state` unchanged: keep-first(min doc_id) is
     latest-by(-doc_id), which is associative, so the state is independent
     of how the corpus was split into micro-batches — and the versioned
-    rename-publish commit (streaming/ingest.py) makes it exact under
+    versioned commit (streaming/ingest.py) makes it exact under
     at-least-once retries. The oracle is the ONE-SHOT batch dedup over
     the full corpus: stream/batch parity, value-hashed. This is the
     streaming twin of `text_dedup_exact` — what a production pipeline
@@ -549,7 +562,7 @@ def streaming_corpus_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = T.StructType(
         [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
     )
-    if not fsutil.exists(spark, os.path.join(state_p, "_SUCCESS")):
+    if _reset_uncommitted(spark, state_p, ckpt):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "3")
@@ -565,7 +578,7 @@ def streaming_corpus_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, state_p, keys=["text_digest"], order_cols=["_neg_id"],
             checkpoint=ckpt,
         )
-    st = spark.read.parquet(state_p)
+    st = ingest.read_state(spark, state_p)
     return st.select(F.col("doc_id").cast("long").alias("doc_id"), "text_digest")
 
 
@@ -986,7 +999,7 @@ def streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch's first segment inherits the open version's valid_from),
     CLOSES (attribute changed: valid_to = the batch's first change), or
     passes through untouched (user absent from the batch). State commits
-    ride the atomic rename-publish protocol with the batch-id replay guard
+    ride the atomic versioned-snapshot commit with the batch-id replay guard
     (exactly-once under retries), and the landing is three
     event-time-ordered files with maxFilesPerTrigger=1, so the merge
     logic genuinely exercises version extension and closure across
@@ -1018,16 +1031,18 @@ def streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
+    _reset_uncommitted(spark, state, ckpt)
+    st = VersionedState(spark, state)
+
     def merge(batch_df, batch_id):
-        done = ingest._committed_batch_id(spark, state)
-        if done is not None and batch_id <= done:
+        if st.already_folded(batch_id):
             return
         bseg = cd.scd2_from_log(
             batch_df, key="user_id", attr="event_type", ts_col="ts",
             order_tail=["event_id"],
         ).select("user_id", "event_type", "valid_from", "valid_to")
-        if fsutil.exists(spark, state):
-            prev = spark.read.parquet(state).select(
+        if st.version() >= 0:
+            prev = ingest.read_state(spark, state).select(
                 "user_id", "event_type", "valid_from", "valid_to"
             )
         else:
@@ -1084,7 +1099,7 @@ def streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         new_state = closed_prev.unionByName(kept_open).unionByName(bseg_adj)
-        ingest._commit_state(new_state, state, batch_id)
+        st.publish({ingest.STATE_TREE: new_state}, batch_id)
 
     stream = (
         spark.readStream.schema(schema)
@@ -1094,7 +1109,7 @@ def streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest.run_available_now(
         stream.writeStream.foreachBatch(merge).option("checkpointLocation", ckpt)
     )
-    out = spark.read.parquet(state)
+    out = ingest.read_state(spark, state)
     return out.select(
         "user_id",
         "event_type",
@@ -1161,7 +1176,7 @@ def streaming_sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
     ingest.hll_merge_stream(stream, state, "user_id", ["event_type"], p=8)
     from etl_aws_spark.operators.sketch import hll_fold
 
-    regs = spark.read.parquet(state)
+    regs = ingest.read_state(spark, state)
     est = hll_fold(regs, ["event_type"], p=8)
     from etl_aws_spark.suite._util import rnd
 
@@ -1221,7 +1236,7 @@ def streaming_sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
     ingest.kmv_merge_stream(stream, state, "user_id", ["event_type"], k=64)
     from etl_aws_spark.operators.sketch import kmv_estimate
 
-    sk = spark.read.parquet(state)
+    sk = ingest.read_state(spark, state)
     est = kmv_estimate(sk, ["event_type"], k=64)
     from etl_aws_spark.suite._util import rnd
 
@@ -1380,7 +1395,7 @@ def streaming_sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataF
     ingest.bloom_merge_stream(
         stream, state, "user_id", ["event_type"], m_bits=8192, n_hashes=2
     )
-    words = spark.read.parquet(state)
+    words = ingest.read_state(spark, state)
     agg = words.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_words"),
         F.sum(F.bit_count("word")).alias("set_bits"),
@@ -1459,7 +1474,7 @@ def streaming_sketch_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
     ingest.hdr_merge_stream(stream, state, "value", ["event_type"])
     from pyspark.sql import Window
 
-    hist = spark.read.parquet(state)
+    hist = ingest.read_state(spark, state)
     wc = Window.partitionBy("event_type").orderBy("bucket")
     wt = Window.partitionBy("event_type")
     cum = hist.select(
@@ -1584,7 +1599,7 @@ def streaming_embedding_cell_assign(spark: SparkSession, sf_dir: str) -> DataFra
         emb.select("vec_id", "embedding").repartition(8).write.mode(
             "overwrite"
         ).parquet(landing)
-    ingest.reset_state(spark, state)
+    fsutil.rmtree(spark, state)
     cents = knn.label_centroids(emb, "label", "embedding", 64).localCheckpoint(
         eager=True
     )
@@ -1601,7 +1616,7 @@ def streaming_embedding_cell_assign(spark: SparkSession, sf_dir: str) -> DataFra
     )
     ingest.ivf_assign_stream(stream, state, cents, "vec_id", "embedding", 64)
 
-    grid = spark.read.parquet(state)
+    grid = ingest.read_state(spark, state)
     # both sides are 0-based posexplode positions; the oracle's 1-based
     # generate_series indices only need to agree WITHIN the oracle
     comp = knn.label_centroid_components(emb, "label", "embedding").select(
@@ -1728,7 +1743,7 @@ def streaming_cdc_tombstone_state(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("value").cast("double").alias("value"),
         ).unionByName(dels)
         ops.repartition(8).write.mode("overwrite").parquet(landing)
-    ingest.reset_state(spark, state)
+    fsutil.rmtree(spark, state)
     schema = T.StructType(
         [
             T.StructField("user_id", T.LongType()),
@@ -1746,7 +1761,7 @@ def streaming_cdc_tombstone_state(spark: SparkSession, sf_dir: str) -> DataFrame
     ingest.upsert_latest_state(
         stream, state, keys=["user_id"], order_cols=["ts", "eid"]
     )
-    st = spark.read.parquet(state)
+    st = ingest.read_state(spark, state)
     return st.select(
         "user_id",
         (F.col("op") == "u").cast("int").alias("alive"),

@@ -97,49 +97,6 @@ def minhash_lsh_dedup(
     )
 
 
-def lsh_closure(assignments: DataFrame, id_col: str, max_rounds: int = 10) -> DataFrame:
-    """Transitive closure of a one-round canonicalization: iterate
-    min-propagation (canonical := canonical's canonical) until fixpoint.
-
-    ``minhash_lsh_dedup`` collapses docs sharing a band in ONE round; chains
-    (A~B via band 1, B~C via band 2) need this pointer-jumping loop —
-    O(log(chain length)) rounds, each a self-join on a 2-column frame.
-    Guards with ``localCheckpoint`` per round so lineage stays flat at scale.
-    Convergence probes run every OTHER round (a probe is a driver action of
-    the same order as a jump round, and pointer jumping squares resolved
-    chain length per round, so the skipped probe rarely buys information) —
-    halving driver actions on deep chains for at most one redundant jump.
-    """
-    cur = assignments.select(id_col, "canonical_id")
-    for i in range(max_rounds):
-        parent = cur.select(
-            F.col(id_col).alias("_pid"), F.col("canonical_id").alias("_pcanon")
-        )
-        nxt = (
-            cur.join(parent, cur["canonical_id"] == parent["_pid"], "left")
-            .select(
-                id_col,
-                F.coalesce("_pcanon", "canonical_id").alias("canonical_id"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        probe = i % 2 == 1 or i == max_rounds - 1
-        if probe:
-            changed = (
-                nxt.alias("n")
-                .join(cur.alias("c"), id_col)
-                .filter(F.col("n.canonical_id") != F.col("c.canonical_id"))
-                .limit(1)
-                .count()
-            )
-        cur = nxt
-        if probe and changed == 0:
-            break
-    return cur.withColumn(
-        "is_dup", (F.col(id_col) != F.col("canonical_id")).cast("int")
-    )
-
-
 def minhash_estimate_quality(
     df: DataFrame,
     id_col: str,

@@ -327,7 +327,7 @@ def test_upsert_latest_state_two_runs_and_batch_split(spark, dirs):
     ])
     run(max_files=1)
     got1 = {r.user_id: (r.event_id, r.value)
-            for r in spark.read.parquet(state).collect()}
+            for r in ingest.read_state(spark, state).collect()}
     assert got1 == {7: (2, 11.0), 8: (3, 20.0)}
 
     # run 2, same checkpoint: user 7 gets a newer row, user 9 appears, an
@@ -339,5 +339,5 @@ def test_upsert_latest_state_two_runs_and_batch_split(spark, dirs):
     ])
     run(max_files=1)
     got2 = {r.user_id: (r.event_id, r.value)
-            for r in spark.read.parquet(state).collect()}
+            for r in ingest.read_state(spark, state).collect()}
     assert got2 == {7: (4, 12.0), 8: (3, 20.0), 9: (5, 30.0)}

@@ -138,7 +138,7 @@ def test_sketch_stream_state_is_batch_split_invariant(spark, tmp_path, sketch):
         )
         run(ingest, stream, state)
         states.append(
-            spark.read.parquet(state).toPandas().sort_values(order).reset_index(drop=True)
+            ingest.read_state(spark, state).toPandas().sort_values(order).reset_index(drop=True)
         )
     assert len(states[0]) > 1
     assert states[0].equals(states[1])
@@ -149,14 +149,16 @@ def test_sketch_stream_state_is_batch_split_invariant(spark, tmp_path, sketch):
 def test_cms_state_commit_is_replay_idempotent_and_atomic(spark, tmp_path):
     """foreachBatch is at-least-once: replaying already-merged batch_ids
     (here: wiping the checkpoint and re-running the identical stream) must
-    NOT double-add the grid, and the state must be a version dir
-    published by rename so a crash mid-commit can never truncate it."""
+    NOT double-add the grid, and the state must be one committed
+    snapshot (one version dir, one commit record), so a crash mid-commit
+    can never truncate it."""
     import os
     import shutil
 
     from pyspark.sql import functions as F, types as T
 
     from etl_aws_spark.streaming import ingest
+    from etl_aws_spark.streaming.state import VersionedState
 
     landing = str(tmp_path / "landing")
     spark.range(0, 300).select(
@@ -180,30 +182,27 @@ def test_cms_state_commit_is_replay_idempotent_and_atomic(spark, tmp_path):
 
     run()
     grid1 = (
-        spark.read.parquet(state).toPandas()
+        ingest.read_state(spark, state).toPandas()
         .sort_values(["depth", "bucket"]).reset_index(drop=True)
     )
     assert grid1.cell_n.sum() == 300 * 4
-    # committed state is a published plain dir, batch_id recoverable
-    # from the name-encoded commit records
-    assert os.path.isdir(state) and not os.path.islink(state)
-    assert ingest._committed_batch_id(spark, state) is not None
+    # every fold published a snapshot and pruned the older ones: one
+    # version dir and its one commit record are left
+    st = VersionedState(spark, state)
+    n = st.version()
+    assert n > 0 and [c[0] for c in st.commits()] == [n]
+    assert sorted(os.listdir(state)) == ["_commits", "v%d" % n]
 
     # wipe the checkpoint: the re-run replays every batch with the same
     # batch_ids from 0 — the guard must skip all of them
     shutil.rmtree(ckpt)
     run()
     grid2 = (
-        spark.read.parquet(state).toPandas()
+        ingest.read_state(spark, state).toPandas()
         .sort_values(["depth", "bucket"]).reset_index(drop=True)
     )
     assert grid1.equals(grid2), "replayed batches were double-merged"
-
-    # reset_state clears the published copy, version store, and records
-    ingest.reset_state(spark, state)
-    assert not os.path.lexists(state)
-    assert not os.path.exists(state + ".versions")
-    assert not os.path.exists(state + ".commits")
+    assert st.version() == n
 
 
 def test_available_now_timeout_stops_the_query_and_raises(spark, tmp_path, monkeypatch):
@@ -311,7 +310,7 @@ def test_kmv_stream_equals_batch_sketch_at_any_split(spark, tmp_path):
             .parquet(landing)
         )
         ingest.kmv_merge_stream(stream, state, "key", ["grp"], k=32)
-        streamed = spark.read.parquet(state).select("grp", "h")
+        streamed = ingest.read_state(spark, state).select("grp", "h")
         # bottom-k merge is associative + idempotent: the streamed sketch
         # must equal the one-shot batch sketch hash-for-hash
         assert streamed.exceptAll(batch.select("grp", "h")).count() == 0
@@ -357,7 +356,7 @@ def test_ivf_assign_stream_is_batch_split_invariant(spark, tmp_path):
         )
         ingest.ivf_assign_stream(stream, state, cents, "vec_id", "embedding", dim)
         pdf = (
-            spark.read.parquet(state)
+            ingest.read_state(spark, state)
             .toPandas()
             .sort_values(["cell", "pos"])
             .reset_index(drop=True)
@@ -375,13 +374,13 @@ def test_ivf_assign_stream_replay_is_idempotent(spark, tmp_path):
     """Wiping the checkpoint replays every batch with the same batch_ids —
     the commit guard must skip them all, leaving the cell state exactly
     once-merged."""
-    import os
     import shutil
 
     from pyspark.sql import functions as F, types as T
 
     from etl_aws_spark.similarity import knn
     from etl_aws_spark.streaming import ingest
+    from etl_aws_spark.streaming.state import VersionedState
 
     dim = 4
     rows = [(i, [10.0 if j == i % 2 else float(i % 5) for j in range(dim)], i % 2)
@@ -410,14 +409,13 @@ def test_ivf_assign_stream_replay_is_idempotent(spark, tmp_path):
         )
 
     run()
-    g1 = (spark.read.parquet(state).toPandas()
+    g1 = (ingest.read_state(spark, state).toPandas()
           .sort_values(["cell", "pos"]).reset_index(drop=True))
     assert g1.groupby("pos").n.sum().eq(80).all()
-    assert os.path.isdir(state) and not os.path.islink(state)
-    assert ingest._committed_batch_id(spark, state) is not None
+    assert VersionedState(spark, state).version() >= 0
     shutil.rmtree(ckpt)
     run()
-    g2 = (spark.read.parquet(state).toPandas()
+    g2 = (ingest.read_state(spark, state).toPandas()
           .sort_values(["cell", "pos"]).reset_index(drop=True))
     assert g1.equals(g2), "replayed batches were double-merged"
 

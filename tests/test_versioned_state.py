@@ -99,6 +99,44 @@ def test_compact_folds_chain_and_gcs(spark, tmp_path):
     assert st.already_folded(1) and not st.already_folded(2)
 
 
+def test_publish_on_empty_store_commits_v0(spark, tmp_path):
+    st = _mk(spark, tmp_path / "st")
+    assert st.publish({"t": spark.createDataFrame([(1, 10)], "k int, v int")}, 7) == 0
+    assert st.commits() == [(0, 7, 0)]
+    assert st.already_folded(7) and not st.already_folded(8)
+    assert sorted(map(tuple, st.read_append("t").collect())) == [(1, 10)]
+
+
+def test_publish_prunes_older_versions_and_records(spark, tmp_path):
+    """A snapshot publish after a 3-version delta chain leaves exactly one
+    version dir and one commit record, and serves only the snapshot."""
+    import os
+
+    root = tmp_path / "st"
+    st = _three_versions(spark, root)
+    snap = spark.createDataFrame([(5, 50)], "k int, v int")
+    assert st.publish({"t": snap}, batch_id=2) == 3
+    assert st.commits() == [(3, 2, 3)]
+    assert sorted(os.listdir(root)) == ["_commits", "v3"]
+    assert [f for f in os.listdir(root / "_commits") if not f.startswith(".")] == [
+        "c00000003.b2.base00000003"
+    ]
+    assert sorted(map(tuple, st.read_append("t").collect())) == [(5, 50)]
+
+
+def test_published_tree_is_invisible_until_committed(spark, tmp_path):
+    """Crash between a publish's tree write and its commit record: the
+    previous snapshot stays current and the next publish reuses the
+    version number, overwriting the partial tree."""
+    st = _mk(spark, tmp_path / "st")
+    st.publish({"t": spark.createDataFrame([(1, 10)], "k int, v int")}, 0)
+    st.write_tree(spark.createDataFrame([(9, 90)], "k int, v int"), 1, "t")
+    assert st.version() == 0
+    assert sorted(map(tuple, st.read_append("t").collect())) == [(1, 10)]
+    assert st.publish({"t": spark.createDataFrame([(2, 20)], "k int, v int")}, 1) == 1
+    assert sorted(map(tuple, st.read_append("t").collect())) == [(2, 20)]
+
+
 def test_lifecycle_compaction_preserves_results(spark, tmp_path):
     """End-to-end: both streaming lifecycles' compaction folds the delta
     chain without changing served results (the compaction-drift
@@ -204,6 +242,7 @@ def test_rollback_rejects_uncommitted_and_pre_base(spark, tmp_path):
     with pytest.raises(ValueError, match="not committed"):
         st.rollback(7)
     st.compact({"t": st.read_latest_wins("t", ["k"])})  # base moves to 3
+    # the compaction pruned v2's commit record: it is still below base
     with pytest.raises(ValueError, match="below base"):
         st.rollback(2)
     assert st.version() == 3

@@ -185,6 +185,12 @@ def main() -> int:
     from etl_aws_spark.session import get_session
     from etl_aws_spark.suite import _util
 
+    # the session starts first: a SIGTERM that unwinds pyspark's gateway
+    # launch deletes the dir the JVM reports its port in, and that JVM
+    # then outlives the run; killed by the default handler, this process
+    # closes the JVM's stdin, and the JVM exits with it
+    spark = get_session("check")
+    spark.sparkContext.setLogLevel("ERROR")
     # a stopped run must still remove its cache dir: atexit does not run
     # when a signal kills the process, but it does run on SystemExit
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
@@ -193,9 +199,6 @@ def main() -> int:
     # of an index cached by older code being served
     _util._CACHE_ROOT = tempfile.mkdtemp(prefix="check_cache_")
     atexit.register(shutil.rmtree, _util._CACHE_ROOT, True)
-
-    spark = get_session("check")
-    spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
