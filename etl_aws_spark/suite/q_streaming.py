@@ -322,11 +322,12 @@ def _reset_uncommitted(spark: SparkSession, state: str, ckpt: str) -> bool:
     """True when ``state`` holds no committed version. The state and its
     checkpoint ``ckpt`` are then removed together, so the caller rebuilds
     both: a checkpoint left behind would mark every landed file as done
-    and fold nothing into the fresh state."""
+    and fold nothing into the fresh state. The rename-publish layout's
+    ``<state>.versions`` and ``<state>.commits`` siblings go with them."""
     if VersionedState(spark, state).version() >= 0:
         return False
-    fsutil.rmtree(spark, state)
-    fsutil.rmtree(spark, ckpt)
+    for p in (state, state + ".versions", state + ".commits", ckpt):
+        fsutil.rmtree(spark, p)
     return True
 
 

@@ -379,3 +379,28 @@ def test_maintenance_query_reuses_v0(spark, tmp_path, monkeypatch):
     assert before
     assert rows() == first
     assert mtimes() == before
+
+
+def test_reset_removes_old_layout_siblings(spark, tmp_path, monkeypatch):
+    """A state with no committed version is rebuilt, and the old layout's
+    ``state.versions/`` and ``state.commits/`` beside it go with it."""
+    import os
+    import shutil
+
+    from etl_aws_spark.suite import _util
+    from etl_aws_spark.suite.q_streaming import streaming_upsert_latest
+
+    monkeypatch.setattr(_util, "_CACHE_ROOT", str(tmp_path))
+    first = sorted(map(tuple, streaming_upsert_latest(spark, SF_TINY).collect()))
+    root = _util.cache_dir(SF_TINY, "stream_upsert")
+    state = os.path.join(root, "state")
+    shutil.rmtree(state)
+    os.makedirs(os.path.join(state, "v0"))  # a tree that was never committed
+    old = [state + ".versions", state + ".commits"]
+    for d in old:
+        os.makedirs(os.path.join(d, "v0"))
+        open(os.path.join(d, "v0", "part-0.parquet"), "w").close()
+
+    again = sorted(map(tuple, streaming_upsert_latest(spark, SF_TINY).collect()))
+    assert again == first
+    assert [d for d in old if os.path.exists(d)] == []

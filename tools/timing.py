@@ -25,8 +25,10 @@ default session. The ROADMAP's "8-vs-32-core ratio" (c8/c32) is
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
+import signal
 import subprocess
 import sys
 import time
@@ -35,6 +37,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # the child's result line; Spark's logger also writes JSON lines to stdout
 _TAG = "TIMINGJSON "
+# a leg that runs longer is stopped: a malformed conf value can leave
+# pyspark retrying its error conversion through the JVM without end
+LEG_TIMEOUT_S = 1800
 
 
 def best_of(spark, fn, sf_dir: str, repeats: int) -> list[float]:
@@ -73,14 +78,25 @@ def schedule(n_variants: int) -> list[int]:
 def run_leg(leg: dict) -> dict[str, list[float]]:
     """Time `leg["names"]` in a child process; returns {query: runs}.
 
-    `leg` holds names, reps, sf and conf, and optionally cpus."""
-    p = subprocess.run(
+    `leg` holds names, reps, sf and conf, and optionally cpus. A leg still
+    running after LEG_TIMEOUT_S is killed together with its JVM (the leg
+    runs in its own process group) and raises."""
+    p = subprocess.Popen(
         [sys.executable, os.path.abspath(__file__), "--leg", json.dumps(leg)],
-        capture_output=True, text=True,
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, start_new_session=True,
     )
-    lines = [ln for ln in p.stdout.splitlines() if ln.startswith(_TAG)]
+    try:
+        out, err = p.communicate(timeout=LEG_TIMEOUT_S)
+    except BaseException as e:  # timed out, or the caller was stopped: the leg goes too
+        with contextlib.suppress(ProcessLookupError):
+            os.killpg(p.pid, signal.SIGKILL)
+        _, err = p.communicate()
+        if isinstance(e, subprocess.TimeoutExpired):
+            raise RuntimeError(f"leg {leg} timed out after {LEG_TIMEOUT_S} s:\n{err[-2000:]}") from None
+        raise
+    lines = [ln for ln in out.splitlines() if ln.startswith(_TAG)]
     if p.returncode != 0 or not lines:
-        raise RuntimeError(f"leg {leg} exited {p.returncode}:\n{p.stderr[-2000:]}")
+        raise RuntimeError(f"leg {leg} exited {p.returncode}:\n{err[-2000:]}")
     return json.loads(lines[-1][len(_TAG):])
 
 
